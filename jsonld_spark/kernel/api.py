@@ -12,7 +12,7 @@ import json
 
 from jsonld_spark.kernel.context import initial_context, process_context
 from jsonld_spark.kernel.exceptions import JsonLdError
-from jsonld_spark.kernel.expand import expand_element
+from jsonld_spark.kernel.expand import expand_document
 from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
 from jsonld_spark.kernel.nquads import nquads_serialize
 from jsonld_spark.kernel.rdf import Quad, expanded_to_quads
@@ -46,12 +46,7 @@ def expand(doc, base=None, expand_context=None, frame=False, loader=None) -> lis
     if expand_context is not None:
         process_context(_unwrap_context(_parse_input(expand_context)), activectx,
                         base_iri=base, loader=loader)
-    result = expand_element(doc, activectx, None, frame, loader, base)
-    if isinstance(result, dict) and len(result) == 1 and "@graph" in result:
-        result = result["@graph"]
-    if not isinstance(result, list):
-        result = [] if result is None else [result]
-    return result
+    return expand_document(doc, activectx, frame, loader, base)
 
 
 def to_rdf_quads(doc, base=None, expand_context=None, produce_generalized_rdf=False,

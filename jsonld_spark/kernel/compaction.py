@@ -7,7 +7,7 @@ Mirrors the reference (Processor.php:925-1101 ``compact``,
 
 In the Spark engine this is a P2 API-parity feature: the inverse
 context is built once on the driver and broadcast; per-document
-compaction runs inside the same mapInPandas kernel stage as expansion.
+compaction runs inside the same mapInArrow kernel stage as expansion.
 """
 
 from __future__ import annotations

@@ -219,6 +219,18 @@ def expand_element(element, activectx, activeprty=None, frame=False, loader=None
     return result
 
 
+def expand_document(doc, activectx, frame=False, loader=None, base_iri=None) -> list:
+    """Expand a whole document: a top-level object whose only key is
+    ``@graph`` unwraps to that graph, and the result is always a list
+    of node objects (reference: JsonLD.php:134-172)."""
+    result = expand_element(doc, activectx, None, frame, loader, base_iri)
+    if isinstance(result, dict) and len(result) == 1 and "@graph" in result:
+        result = result["@graph"]
+    if not isinstance(result, list):
+        result = [] if result is None else [result]
+    return result
+
+
 def _copy_ctx(activectx: dict) -> dict:
     # term definitions are never mutated in place, so a shallow copy
     # plus per-term copies on write (process_context always builds new

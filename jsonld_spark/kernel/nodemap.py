@@ -10,8 +10,9 @@ Result-identical to the reference (Processor.php:1896-2055
 ``generateNodeMap``, Processor.php:2069-2079 ``getBlankNodeId``),
 including blank-node label assignment order, so that single-process
 output is byte-identical. In the Spark pipeline this runs per document
-inside a ``mapInPandas`` stage with a document-local issuer; labels are
-then globally renumbered by a stable window (SURVEY.md §7.1 step 3).
+inside the ``mapInArrow`` kernel stage with a document-local issuer;
+labels are then globally renumbered by a stable window (SURVEY.md §7.1
+step 3).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """S3-S7: expansion kernel stage, blank-node canonicalization, and the
 end-to-end transcripts -> triples pipeline (SURVEY.md §7.0).
 
-The only Python in the hot path is one Arrow-batched ``mapInPandas``
+The only Python in the hot path is one Arrow-batched ``mapInArrow``
 stage running the pure kernels (tree recursion is not expressible in
 Catalyst); everything before it (extraction/payload) and after it
 (canonicalization, dedup, serialization) is native column expressions
@@ -16,17 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsonld_spark.kernel.context import initial_context, process_context
-from jsonld_spark.kernel.expand import expand_element
+from jsonld_spark.kernel.expand import expand_document
 from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
 from jsonld_spark.kernel.rdf import node_map_to_quads
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT, with_payload
 from jsonld_spark.sources.transcripts import transcripts_from_events
 
 QUAD_COLUMNS = ["graph", "subject", "predicate", "obj_kind", "obj_value", "obj_type", "obj_lang"]
-QUAD_SCHEMA = (
-    "conv_id string, turn_idx int, graph string, subject string, predicate string, "
-    "obj_kind string, obj_value string, obj_type string, obj_lang string"
-)
 
 
 def resolve_context(context: dict | None, base: str | None = None) -> dict:
@@ -40,140 +36,115 @@ def resolve_context(context: dict | None, base: str | None = None) -> dict:
     return activectx
 
 
-def docs_to_quads(
+def _kernel_stage(
     docs: DataFrame,
-    context: dict | None = PIPELINE_CONTEXT,
-    base: str | None = None,
-    generalized_rdf: bool = False,
-    doc_col: str = "jsonld",
+    activectx: dict,
+    per_doc,
+    columns: list[str],
     parallelism: int | None = None,
+    base: str | None = None,
 ) -> DataFrame:
-    """S3+S4: per-document expand -> node map -> quads, exploded 1->N.
+    """The one per-document kernel stage: parse -> expand -> ``per_doc``
+    over (conv_id, turn_idx, jsonld), as a single Arrow-batched
+    ``mapInArrow``.
 
-    Input needs (conv_id, turn_idx, <doc_col>); output one row per quad
-    with lineage columns (conv_id, turn_idx) and document-local
-    ``_:bN`` blank-node labels (deterministic per document).
+    ``per_doc`` maps an expanded document to a list of output tuples,
+    one value per name in ``columns`` (all strings). Output is (conv_id,
+    turn_idx, *columns, _error). A document that cannot be processed
+    yields one row of nulls with ``_error`` set instead of failing the
+    job — the corrupt-record channel for the reference's error taxonomy
+    (Processor.php:180-228): "missing document" for a null payload,
+    "loading document failed" when parsing fails (invalid JSON, or
+    nesting past the parser's depth limit like the reference's
+    ``json_decode``), and the spec code of any ``JsonLdError`` raised
+    by expansion or ``per_doc``. Any other exception fails the job.
+
+    ``parallelism``: None repartitions to ``kernel_partitions``' floor,
+    0 means the caller already partitioned, n repartitions to n.
     """
     from jsonld_spark.plans.session import ensure_package_shipped
 
     ensure_package_shipped(docs.sparkSession)
-    activectx = resolve_context(context, base)
+    names = ["conv_id", "turn_idx", *columns, "_error"]
 
     def emit(batches):
         import pyarrow as pa
 
         from jsonld_spark.kernel.context import ActiveContext
+        from jsonld_spark.kernel.exceptions import JsonLdError
 
         # re-wrap on the worker: the definition memo does not survive
         # pickling, and a warm memo is a ~1.3x kernel speedup
         ctx = ActiveContext(activectx)
+        quarantined = [(None,) * len(columns)]
+
+        def run(doc):
+            if doc is None:
+                return quarantined, "missing document"
+            try:
+                parsed = json.loads(doc)
+            except (ValueError, RecursionError):
+                return quarantined, JsonLdError.LOADING_DOCUMENT_FAILED
+            try:
+                return per_doc(expand_document(parsed, ctx, base_iri=base)), None
+            except JsonLdError as exc:
+                return quarantined, exc.code
+
         # columnar output buffers: building pyarrow arrays directly is
         # ~1.4x cheaper than pd.DataFrame(list-of-tuples) + pandas->Arrow
-        names = ["conv_id", "turn_idx", *QUAD_COLUMNS]
         for batch in batches:
-            conv_ids, turn_idxs, docs_col = (
-                batch.column(0).to_pylist(),
-                batch.column(1).to_pylist(),
-                batch.column(2).to_pylist(),
-            )
-            cols = [[] for _ in names]
-            for conv_id, turn_idx, doc in zip(conv_ids, turn_idxs, docs_col):
-                if doc is None:
-                    continue
-                expanded = expand_element(json.loads(doc), ctx, None, False, None, base)
-                if isinstance(expanded, dict) and len(expanded) == 1 and "@graph" in expanded:
-                    expanded = expanded["@graph"]
-                if not isinstance(expanded, list):
-                    expanded = [] if expanded is None else [expanded]
-                issuer = BlankNodeIssuer()
-                node_map = build_node_map(expanded, issuer)
-                for quad in node_map_to_quads(node_map, issuer, generalized_rdf):
-                    cols[0].append(conv_id)
-                    cols[1].append(turn_idx)
-                    for i, value in enumerate(quad, start=2):
-                        cols[i].append(value)
+            conv_ids, turn_idxs, errors = [], [], []
+            outs = [[] for _ in columns]
+            for conv_id, turn_idx, doc in zip(*(c.to_pylist() for c in batch.columns)):
+                rows, error = run(doc)
+                conv_ids += [conv_id] * len(rows)
+                turn_idxs += [turn_idx] * len(rows)
+                errors += [error] * len(rows)
+                for out, values in zip(outs, zip(*rows)):
+                    out += values
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(cols[0], pa.string()),
-                    pa.array(cols[1], pa.int32()),
-                    *[pa.array(c, pa.string()) for c in cols[2:]],
+                    pa.array(conv_ids, pa.string()),
+                    pa.array(turn_idxs, pa.int32()),
+                    *[pa.array(c, pa.string()) for c in outs],
+                    pa.array(errors, pa.string()),
                 ],
                 names=names,
             )
 
     # Column pruning: ship only the three needed columns into Arrow.
-    # parallelism=0 means the caller already repartitioned for CPU
-    # (see transcripts_to_triples); otherwise repartition here — AQE
-    # sizes shuffle partitions by BYTES (64 MiB advisory), but this
+    # AQE sizes shuffle partitions by BYTES (64 MiB advisory), but this
     # stage's cost is per-row CPU, so a byte-small input would coalesce
     # to a handful of tasks and stop scaling with cores.
-    pruned = docs.select("conv_id", "turn_idx", doc_col)
-    if parallelism != 0:
-        n_parts = parallelism or 2 * docs.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n_parts)
-    return pruned.mapInArrow(emit, QUAD_SCHEMA)
+    pruned = docs.select("conv_id", "turn_idx", "jsonld")
+    if parallelism is None:
+        parallelism = kernel_partitions(docs.sparkSession)
+    if parallelism:
+        pruned = pruned.repartition(parallelism)
+    schema = ", ".join(["conv_id string", "turn_idx int", *(f"{c} string" for c in columns),
+                        "_error string"])
+    return pruned.mapInArrow(emit, schema)
 
 
-ERROR_QUAD_SCHEMA = QUAD_SCHEMA + ", _error string"
-
-
-def docs_to_quads_safe(
+def docs_to_quads(
     docs: DataFrame,
     context: dict | None = PIPELINE_CONTEXT,
-    base: str | None = None,
-    generalized_rdf: bool = False,
-    doc_col: str = "jsonld",
     parallelism: int | None = None,
 ) -> DataFrame:
-    """Error-tolerant kernel stage: documents that fail to parse or
-    expand produce one row with ``_error`` set to the spec error code
-    instead of failing the job (the corrupt-record channel for the
-    reference's parse/expansion error taxonomy, Processor.php:180-228;
-    a 100 TB ingest quarantines bad documents, it doesn't die)."""
-    from jsonld_spark.kernel.exceptions import JsonLdError
-    from jsonld_spark.plans.session import ensure_package_shipped
+    """S3+S4: per-document expand -> node map -> quads, exploded 1->N.
 
-    ensure_package_shipped(docs.sparkSession)
-    activectx = resolve_context(context, base)
+    Input needs (conv_id, turn_idx, jsonld); output one row per quad
+    with lineage columns (conv_id, turn_idx), document-local ``_:bN``
+    blank-node labels (deterministic per document) and a null
+    ``_error``, plus one ``_error`` row per quarantined document (see
+    ``_kernel_stage``).
+    """
 
-    def emit(batches):
-        import pandas as pd
+    def quads(expanded):
+        issuer = BlankNodeIssuer()
+        return node_map_to_quads(build_node_map(expanded, issuer), issuer)
 
-        from jsonld_spark.kernel.context import ActiveContext
-
-        ctx = ActiveContext(activectx)
-        nulls = (None,) * len(QUAD_COLUMNS)
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, doc in zip(pdf["conv_id"], pdf["turn_idx"], pdf[doc_col]):
-                if doc is None:
-                    rows.append((conv_id, turn_idx) + nulls + ("missing document",))
-                    continue
-                try:
-                    expanded = expand_element(json.loads(doc), ctx, None, False, None, base)
-                except JsonLdError as exc:
-                    rows.append((conv_id, turn_idx) + nulls + (exc.code,))
-                    continue
-                except ValueError:
-                    rows.append((conv_id, turn_idx) + nulls + ("loading document failed",))
-                    continue
-                if isinstance(expanded, dict) and len(expanded) == 1 and "@graph" in expanded:
-                    expanded = expanded["@graph"]
-                if not isinstance(expanded, list):
-                    expanded = [] if expanded is None else [expanded]
-                issuer = BlankNodeIssuer()
-                node_map = build_node_map(expanded, issuer)
-                for quad in node_map_to_quads(node_map, issuer, generalized_rdf):
-                    rows.append((conv_id, turn_idx) + quad + (None,))
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "turn_idx"] + QUAD_COLUMNS + ["_error"]
-            )
-
-    pruned = docs.select("conv_id", "turn_idx", doc_col)
-    if parallelism != 0:
-        n_parts = parallelism or 2 * docs.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n_parts)
-    return pruned.mapInPandas(emit, ERROR_QUAD_SCHEMA)
+    return _kernel_stage(docs, resolve_context(context), quads, QUAD_COLUMNS, parallelism)
 
 
 def _relabel(col, key):
@@ -268,7 +239,8 @@ def transcripts_to_triples(
     parted = transcripts.repartition(n_parts)
     docs = with_payload(parted)
     quads = docs_to_quads(docs, context=context, parallelism=0)
-    quads = canonicalize_bnodes(quads)
+    # quarantined documents carry no quads
+    quads = canonicalize_bnodes(quads.where(F.col("_error").isNull()).drop("_error"))
     if keep_lineage:
         return quads
     from jsonld_spark.operators.extract import entity_triples

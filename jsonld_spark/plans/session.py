@@ -28,6 +28,8 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
+    codec = (extra_conf or {}).get(
+        "spark.io.compression.codec", os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -45,10 +47,11 @@ def get_spark(
         # is spill RATIO: the ~1e9-row candidate sort of degree-weighted
         # negative sampling at sf0.1 fills the sandbox disk under lz4
         # and survives under zstd — so large-volume spilling jobs opt in
-        # via SPARK_GRAFT_IO_CODEC=zstd (tools/volume_check.py and the
-        # sf0.1 sweep do); the default stays Spark's lz4.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
+        # via SPARK_GRAFT_IO_CODEC=zstd (tools/volume_check.py and
+        # tools/check_oracles.py do); the default stays Spark's lz4.
+        # The codec is fixed when the SparkContext starts, so an opt-in
+        # against an already-running session fails fast below.
+        .config("spark.io.compression.codec", codec)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -70,7 +73,15 @@ def get_spark(
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    active = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
+    if active != codec:
+        raise RuntimeError(
+            f"spark.io.compression.codec={codec!r} was requested but the running "
+            f"SparkContext uses {active!r}: getOrCreate reused a session started "
+            "with another codec. Stop that session first, or set "
+            "SPARK_GRAFT_IO_CODEC before the first get_spark call.")
+    return spark
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str):

@@ -111,16 +111,3 @@ def surface_pattern() -> str:
     batched mention detection). Longest-first so aliases never shadow."""
     surfaces = sorted({r["surface"] for r in dictionary_rows()}, key=len, reverse=True)
     return "(" + "|".join(surfaces) + ")"
-
-
-def dictionary_values_sql() -> str:
-    """DuckDB VALUES clause for the raw dictionary (entity_id, surface,
-    type_term, prior, prior_str, ent_index)."""
-    parts = []
-    for row in dictionary_rows():
-        i = int(row["entity_id"].rsplit("E", 1)[1])
-        parts.append(
-            f"('{row['entity_id']}', '{row['surface']}', '{row['type_term']}', "
-            f"{row['prior']!r}, '{entity_prior_str(i)}', {i})"
-        )
-    return "(VALUES " + ", ".join(parts) + ") AS dict(entity_id, surface, type_term, prior, prior_str, ent_index)"

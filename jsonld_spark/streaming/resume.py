@@ -74,7 +74,8 @@ def lookup_subject(spark: SparkSession, out_root: str, subject: str,
     """Point lookup on the materialized triple table: the
     subject-bucket predicate prunes the scan to one partition
     directory per snapshot (Graph::getNode at scale,
-    reference Graph.php:102-111)."""
+    reference Graph.php:102-111). Deduplicated like ``read_triples``:
+    an entity fact is committed once per conversation bucket."""
     df = SnapshotTable(out_root).read(spark)
     if df is None:
         return None
@@ -83,7 +84,7 @@ def lookup_subject(spark: SparkSession, out_root: str, subject: str,
     bucket = F.pmod(F.xxhash64(F.lit(subject)), F.lit(subject_buckets)).cast("int")
     return df.where(
         (F.col("subject_bucket") == bucket) & (F.col("subject") == subject)
-    ).drop("subject_bucket")
+    ).drop("subject_bucket").dropDuplicates(QUAD_COLUMNS)
 
 
 def read_triples(spark: SparkSession, out_root: str) -> DataFrame | None:

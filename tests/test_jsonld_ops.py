@@ -8,11 +8,11 @@ import os
 import pytest
 
 from jsonld_spark.kernel.compaction import compact_element, create_inverse_context
+from jsonld_spark.kernel.expand import expand_document
 from jsonld_spark.kernel.fromrdf import quads_to_jsonld
 from jsonld_spark.kernel.rdf import Quad
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT, with_payload
 from jsonld_spark.operators.jsonld_ops import (
-    _expand_with,
     compact_documents,
     expand_documents,
     flatten_documents,
@@ -38,7 +38,7 @@ def test_expand_documents_matches_kernel(spark):
     activectx = resolve_context(PIPELINE_CONTEXT)
     expected = {
         (r["conv_id"], r["turn_idx"]): json.dumps(
-            _expand_with(r["jsonld"], activectx, None), sort_keys=True
+            expand_document(json.loads(r["jsonld"]), activectx), sort_keys=True
         )
         for r in rows
     }
@@ -62,7 +62,7 @@ def test_compact_documents_roundtrip(spark):
     for row in out:
         compacted = json.loads(row["doc"])
         expected = compact_element(
-            _expand_with(originals[(row["conv_id"], row["turn_idx"])], activectx, None),
+            expand_document(json.loads(originals[(row["conv_id"], row["turn_idx"])]), activectx),
             activectx, inversectx, None, True,
         )
         assert compacted == expected
@@ -79,6 +79,24 @@ def test_flatten_documents_shape(spark):
     assert ids == sorted(ids)  # flatten sorts subjects
     turn_nodes = [n for n in flat if "/turn/" in n["@id"]]
     assert len(turn_nodes) == 1
+
+
+def test_document_transforms_quarantine_bad_documents(spark):
+    """A document the kernel rejects gets doc = NULL, like a missing
+    one, instead of failing the job; the output shape is unchanged."""
+    rows = [
+        ("c", 0, '{"@id": "http://ex.org/1", "http://v/p": "ok"}'),
+        ("c", 1, "{not json"),
+        ("c", 2, '{"@id": 42, "http://v/p": "bad id"}'),
+        ("c", 3, None),
+    ]
+    docs = spark.createDataFrame(rows, "conv_id string, turn_idx int, jsonld string")
+    for transform in (expand_documents, compact_documents, flatten_documents):
+        out = transform(docs, n_rows=len(rows))
+        assert out.columns == ["conv_id", "turn_idx", "doc"]
+        by_turn = {r["turn_idx"]: r["doc"] for r in out.collect()}
+        assert sorted(by_turn) == [0, 1, 2, 3] and by_turn[0] is not None
+        assert [by_turn[i] for i in (1, 2, 3)] == [None, None, None], transform.__name__
 
 
 def _kernel_expected(rows, **kw):

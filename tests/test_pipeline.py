@@ -272,7 +272,7 @@ def test_lineage_metrics_cover_all_quads(spark):
 def test_resume_is_idempotent(tmp_path, spark):
     """Kill after 2 of 4 bucket commits; the resumed run must complete
     exactly the remaining buckets and equal a from-scratch run."""
-    from jsonld_spark.streaming.resume import read_triples, run_resumable
+    from jsonld_spark.streaming.resume import lookup_subject, read_triples, run_resumable
 
     out = str(tmp_path / "triples")
     table = run_resumable(spark, SF, out, n_buckets=4, fail_after=2)
@@ -291,6 +291,15 @@ def test_resume_is_idempotent(tmp_path, spark):
     seq = table.latest_manifest()["sequence"]
     run_resumable(spark, SF, out, n_buckets=4)
     assert SnapshotTableSeq(out) == seq
+
+    # an entity fact is committed once per bucket; a point lookup must
+    # still return each triple once, exactly as the deduplicated read
+    head = E.entity_iri(0)
+    looked_up = [tuple(r) for r in lookup_subject(spark, out, head).collect()]
+    assert looked_up and len(looked_up) == len(set(looked_up))
+    assert set(looked_up) == {
+        tuple(r) for r in resumed.where(F.col("subject") == head).collect()
+    }
 
 
 def SnapshotTableSeq(root):
@@ -321,17 +330,20 @@ def test_subject_bucket_partition_pruning(tmp_path, spark):
 def test_docs_to_quads_error_channel(spark):
     """Malformed documents are quarantined with spec error codes, not
     job failures (the corrupt-record channel, SURVEY.md §2.1)."""
-    from jsonld_spark.operators.kg_pipeline import docs_to_quads_safe
-
     rows = [
         ("c1", 0, '{"@id": "http://ex.org/1", "http://v/p": "ok"}'),
         ("c1", 1, "{not json"),
         ("c1", 2, '{"@id": 42, "http://v/p": "bad id"}'),
         ("c1", 3, None),
         ("c1", 4, '{"@context": {"a": "b", "b": "a"}, "a": "cycle"}'),
+        # raised by the node map, after expansion succeeded
+        ("c1", 5, '[{"@id": "http://ex.org/x", "@index": "a", "http://v/p": "1"},'
+                  ' {"@id": "http://ex.org/x", "@index": "b"}]'),
+        # past the parser's nesting limit (RecursionError, not ValueError)
+        ("c1", 6, '{"http://v/p": ' * 2000 + '"deep"' + "}" * 2000),
     ]
     docs = spark.createDataFrame(rows, "conv_id string, turn_idx int, jsonld string")
-    out = docs_to_quads_safe(docs, context=None).collect()
+    out = docs_to_quads(docs, context=None).collect()
     good = [r for r in out if r["_error"] is None]
     errors = {r["turn_idx"]: r["_error"] for r in out if r["_error"] is not None}
     assert len(good) == 1 and good[0]["obj_value"] == "ok"
@@ -339,6 +351,8 @@ def test_docs_to_quads_error_channel(spark):
     assert errors[2] == "invalid @id value"
     assert errors[3] == "missing document"
     assert errors[4] == "cyclic IRI mapping"
+    assert errors[5] == "conflicting indexes"
+    assert errors[6] == "loading document failed"
 
 
 def test_multimodal_stub_and_fake_decoder(spark):

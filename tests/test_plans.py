@@ -384,3 +384,16 @@ def test_shingle_construction_never_pushed_into_scan(spark):
                     assert "concat_ws" not in line, line
     finally:
         spark.conf.unset("spark.sql.maxMetadataStringLength")
+
+
+def test_get_spark_fails_fast_on_ignored_codec(spark):
+    """The io codec is fixed when the SparkContext starts: a codec
+    opt-in that getOrCreate would silently drop must raise instead."""
+    from jsonld_spark.plans.session import get_spark
+
+    active = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
+    other = "lz4" if active == "zstd" else "zstd"
+    with pytest.raises(RuntimeError, match="spark.io.compression.codec"):
+        get_spark(app_name="jsonld-spark-tests", cores=4, shuffle_partitions=8,
+                  extra_conf={"spark.io.compression.codec": other})
+    assert spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4") == active

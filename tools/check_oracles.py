@@ -27,6 +27,8 @@ TABLES = [
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     wanted = sys.argv[2:]
+    # zstd spill: an sf0.1 sweep fills the disk under lz4 (plans/session.py)
+    os.environ.setdefault("SPARK_GRAFT_IO_CODEC", "zstd")
     spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=16)
 
     con = duckdb.connect()
