@@ -19,7 +19,7 @@ from jsonld_spark.kernel.context import initial_context, process_context
 from jsonld_spark.kernel.expand import expand_document
 from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
 from jsonld_spark.kernel.rdf import node_map_to_quads
-from jsonld_spark.operators.extract import PIPELINE_CONTEXT, with_payload
+from jsonld_spark.operators.extract import PIPELINE_CONTEXT, entity_triples, with_payload
 from jsonld_spark.sources.transcripts import transcripts_from_events
 
 QUAD_COLUMNS = ["graph", "subject", "predicate", "obj_kind", "obj_value", "obj_type", "obj_lang"]
@@ -54,10 +54,11 @@ def _kernel_stage(
     yields one row of nulls with ``_error`` set instead of failing the
     job — the corrupt-record channel for the reference's error taxonomy
     (Processor.php:180-228): "missing document" for a null payload,
-    "loading document failed" when parsing fails (invalid JSON, or
-    nesting past the parser's depth limit like the reference's
-    ``json_decode``), and the spec code of any ``JsonLdError`` raised
-    by expansion or ``per_doc``. Any other exception fails the job.
+    "loading document failed" when parsing fails (invalid JSON) or the
+    document nests past the parser's or the kernels' recursion depth
+    (like the reference's ``json_decode`` depth limit), and the spec
+    code of any ``JsonLdError`` raised by expansion or ``per_doc``. Any
+    other exception fails the job.
 
     ``parallelism``: None repartitions to ``kernel_partitions``' floor,
     0 means the caller already partitioned, n repartitions to n.
@@ -89,6 +90,10 @@ def _kernel_stage(
                 return per_doc(expand_document(parsed, ctx, base_iri=base)), None
             except JsonLdError as exc:
                 return quarantined, exc.code
+            except RecursionError:
+                # nested deeper than the recursive kernels reach; the
+                # reference's json_decode (depth 512) cannot load it
+                return quarantined, JsonLdError.LOADING_DOCUMENT_FAILED
 
         # columnar output buffers: building pyarrow arrays directly is
         # ~1.4x cheaper than pd.DataFrame(list-of-tuples) + pandas->Arrow
@@ -175,14 +180,6 @@ def canonicalize_bnodes(quads: DataFrame) -> DataFrame:
     )
 
 
-def distinct_triples(quads: DataFrame) -> DataFrame:
-    """Global set semantics over the canonical quad columns (the
-    cross-document analogue of mergeIntoProperty(unique=true),
-    Processor.php:2860-2897). This is the pipeline's main shuffle;
-    partial aggregation + AQE absorb the head-entity skew."""
-    return quads.select(*QUAD_COLUMNS).dropDuplicates(QUAD_COLUMNS)
-
-
 TARGET_ROWS_PER_TASK = 16_000
 
 
@@ -204,55 +201,51 @@ def kernel_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
     return max(floor, math.ceil(n_rows / TARGET_ROWS_PER_TASK))
 
 
+def _kernel_partitioned(transcripts: DataFrame, n_rows: int | None) -> DataFrame:
+    """Repartition BEFORE payload assembly: payload JSON construction
+    and the kernel stage are CPU-per-row bound, and AQE's byte-based
+    coalescing of the upstream window shuffle would otherwise run them
+    on a handful of tasks (0.29 scaling efficiency 8->32 cores before;
+    near-linear after; BENCH/BASELINE.md). One shuffle covers both
+    stages. Callers that know the input cardinality cheaply (parquet
+    footer counts) pass ``n_rows``; otherwise one count() of the input
+    pays for correctly-sized CPU stages (trivial next to the kernel)."""
+    if n_rows is None:
+        n_rows = transcripts.count()
+    return transcripts.repartition(kernel_partitions(transcripts.sparkSession, n_rows))
+
+
+def _quads_of(parted: DataFrame) -> DataFrame:
+    quads = docs_to_quads(with_payload(parted), parallelism=0)
+    # quarantined documents carry no quads
+    return canonicalize_bnodes(quads.where(F.col("_error").isNull()).drop("_error"))
+
+
+def canonical_quads(transcripts: DataFrame, n_rows: int | None = None) -> DataFrame:
+    """S1->S6: transcripts -> the document-kernel quad stream with
+    globally unique blank-node labels, keeping the lineage columns
+    (conv_id, turn_idx). Unique by construction: every subject embeds
+    the turn key and the kernel dedups within a document."""
+    return _quads_of(_kernel_partitioned(transcripts, n_rows))
+
+
 def transcripts_to_triples(
     transcripts: DataFrame,
-    context: dict | None = PIPELINE_CONTEXT,
-    keep_lineage: bool = False,
-    dedup: str = "split",
     texts: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """Full S1->S7: transcripts -> canonical deduplicated triples.
+    """Full S1->S7: transcripts -> the canonical triple set.
 
-    Physical shape (both measured, see BENCH/BASELINE.md):
-
-    * Repartition BEFORE payload assembly: payload JSON construction
-      and the kernel stage are CPU-per-row bound, and AQE's byte-based
-      coalescing of the upstream window shuffle would otherwise run
-      them on a handful of tasks (0.29 scaling efficiency 8->32 cores
-      before; near-linear after). One shuffle covers both stages.
-    * dedup="split": the document-kernel stream is unique by
-      construction (every subject embeds the turn key; the kernel
-      dedups within a document), so it flows to the sink with NO
-      global dropDuplicates; the only cross-turn repeats are the
-      corpus-level entity facts, emitted relationally by
-      entity_triples() as a small distinct. dedup="global" keeps the
-      classic full-stream dropDuplicates for arbitrary payloads.
+    The kernel stream (``canonical_quads``) flows to the sink with NO
+    global dropDuplicates; the only cross-turn repeats are the
+    corpus-level entity facts, emitted relationally by
+    ``entity_triples`` as a small distinct. Entity facts need only
+    text: a window-free ``texts`` frame (when the caller has one)
+    skips the row_number shuffle on that branch.
     """
-    # Partitioning scales with data volume (see kernel_partitions).
-    # Callers that know the input cardinality cheaply (parquet footer
-    # counts) pass n_rows; otherwise one count() of the input pays for
-    # correctly-sized CPU stages (trivial next to the kernel work).
-    if n_rows is None:
-        n_rows = transcripts.count()
-    n_parts = kernel_partitions(transcripts.sparkSession, n_rows)
-    parted = transcripts.repartition(n_parts)
-    docs = with_payload(parted)
-    quads = docs_to_quads(docs, context=context, parallelism=0)
-    # quarantined documents carry no quads
-    quads = canonicalize_bnodes(quads.where(F.col("_error").isNull()).drop("_error"))
-    if keep_lineage:
-        return quads
-    from jsonld_spark.operators.extract import entity_triples
-
-    # entity facts need only text: a window-free text frame (when the
-    # caller has one) skips the row_number shuffle on this branch
+    parted = _kernel_partitioned(transcripts, n_rows)
     entities = entity_triples(texts if texts is not None else parted)
-    if dedup == "split":
-        return quads.select(*QUAD_COLUMNS).unionByName(entities)
-    # "global": belt-and-braces full-stream dedup (for payloads without
-    # the per-turn uniqueness invariant)
-    return distinct_triples(quads.select(*QUAD_COLUMNS).unionByName(entities))
+    return _quads_of(parted).select(*QUAD_COLUMNS).unionByName(entities)
 
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,10 +2,12 @@
 per-partition lineage — input split, triple counts, link-score
 histograms — so a killed job resumes idempotently").
 
-Lineage is computed *in the same pass* as the data (a groupBy over the
-quads carrying their input keys), not a second scan: input splits are
-conv-id hash buckets, and the link-score histogram aggregates the
-mention-score literals the pipeline itself emitted.
+Lineage is computed *in the same pass* as the data, not a second
+scan: ``streaming/resume.commit_transcripts`` runs the document kernel
+once, persists the quads carrying their input keys, and feeds them to
+both the triple write and this groupBy. Input splits are conv-id hash
+buckets, and the link-score histogram aggregates the mention-score
+literals the pipeline itself emitted.
 """
 
 from __future__ import annotations

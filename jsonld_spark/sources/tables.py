@@ -1,11 +1,9 @@
 """Snapshot-committed parquet tables with manifests and lineage.
 
 An Iceberg-style (snapshot + manifest) table implemented over plain
-parquet, because the Iceberg runtime jars are not available in this
-container. The layout keeps Iceberg's guarantees that matter for the
-north rule — atomic commits, snapshot isolation for readers, and
-resume bookkeeping — while `write_iceberg` below shows the one-liner
-used when a real catalog is configured.
+parquet, so it needs no Iceberg runtime or catalog. The layout keeps
+Iceberg's guarantees that matter for the north rule — atomic commits,
+snapshot isolation for readers, and resume bookkeeping.
 
 Layout:
   <root>/data/<snapshot_id>/part-*.parquet      (immutable data files)
@@ -119,30 +117,6 @@ class SnapshotTable:
         if not manifest or not manifest["lineage_dirs"]:
             return None
         return spark.read.parquet(*manifest["lineage_dirs"])
-
-
-def write_iceberg(df: DataFrame, table: str, bucket_col: str = "subject", buckets: int = 64):
-    """The real-Iceberg sink used when a catalog is configured:
-    ``df.writeTo(table).partitionedBy(bucket(N, subject))``. Kept
-    behind a capability check since this container ships no Iceberg
-    runtime."""
-    try:
-        (
-            df.writeTo(table)
-            .using("iceberg")
-            .partitionedBy(F_bucket(buckets, bucket_col))
-            .createOrReplace()
-        )
-    except Exception as exc:  # noqa: BLE001
-        raise RuntimeError(
-            "Iceberg catalog not available in this environment; use SnapshotTable"
-        ) from exc
-
-
-def F_bucket(n, col):
-    from pyspark.sql.functions import bucket
-
-    return bucket(n, col)
 
 
 def write_bucketed(

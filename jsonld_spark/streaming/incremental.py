@@ -3,7 +3,9 @@
 The reference is a batch, in-memory library (SURVEY.md §2.6), so this
 is engine capability beyond it: transcripts arriving as files are
 processed incrementally — ``readStream`` -> the same S1..S7 stages via
-``foreachBatch`` -> atomic SnapshotTable commits. The stream
+``foreachBatch`` -> the batch resume path's own commit
+(``resume.commit_transcripts``: one kernel pass, subject-bucket
+partitioned, so point lookups work on a stream-built table). The stream
 checkpoint gives exactly-once per input file; the snapshot manifest
 gives atomic visibility (same guarantees as the batch resume path,
 arrived-data-driven instead of bucket-driven).
@@ -18,9 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsonld_spark.operators.extract import _link_map_expr
-from jsonld_spark.operators.kg_pipeline import QUAD_COLUMNS, transcripts_to_triples
-from jsonld_spark.operators.lineage import lineage_metrics
 from jsonld_spark.sources.tables import SnapshotTable
+from jsonld_spark.streaming.resume import commit_transcripts
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -32,28 +33,18 @@ def stream_transcripts_to_triples(
     input_dir: str,
     out_root: str,
     checkpoint_dir: str,
-    n_lineage_buckets: int = 8,
 ) -> SnapshotTable:
     """Process all transcript parquet files not yet seen by the
     checkpoint (Trigger.AvailableNow), committing each micro-batch as
-    a snapshot with lineage. Re-running after new files appear
+    a snapshot with lineage (over 8 conv-id buckets) through
+    ``resume.commit_transcripts``. Re-running after new files appear
     processes only the new files."""
     table = SnapshotTable(out_root)
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        quads = transcripts_to_triples(batch_df, keep_lineage=True)
-        lineage = lineage_metrics(quads, n_lineage_buckets)
-        from jsonld_spark.operators.extract import entity_triples
-
-        triples = (
-            quads.select(*QUAD_COLUMNS)
-            .unionByName(entity_triples(batch_df))
-            .dropDuplicates(QUAD_COLUMNS)
-        )
-        table.commit(triples, [f"stream-batch-{batch_id}"], lineage=lineage)
+        if not batch_df.isEmpty():
+            commit_transcripts(table, batch_df, [f"stream-batch-{batch_id}"], 8)
 
     query = (
         stream.writeStream.foreachBatch(process_batch)

@@ -27,11 +27,11 @@ from jsonld_spark.operators.extract import (
 )
 from jsonld_spark.operators.kg_pipeline import (
     QUAD_COLUMNS,
+    canonical_quads,
     canonicalize_bnodes,
     docs_to_quads,
     kg_triples,
     resolve_context,
-    transcripts_to_triples,
 )
 from jsonld_spark.operators.lineage import lineage_metrics
 from jsonld_spark.sources import entities as E
@@ -93,16 +93,11 @@ def test_pipeline_matches_kernel_differential(spark):
                           E.VOCAB + e["type_term"], None, None))
             expected.add((None, e["entity_id"], E.VOCAB + "label", "literal",
                           surface, xsd_string, None))
-    actual = {tuple(r) for r in kg_triples(spark, SF).collect()}
-    assert actual == expected
-    # and global-dedup mode yields the same set
-    global_mode = {
-        tuple(r)
-        for r in __import__("jsonld_spark.operators.kg_pipeline", fromlist=["x"])
-        .transcripts_to_triples(t, dedup="global")
-        .collect()
-    }
-    assert global_mode == expected
+    rows = [tuple(r) for r in kg_triples(spark, SF).collect()]
+    assert set(rows) == expected
+    # set semantics without a global dropDuplicates: the kernel stream
+    # is unique per turn and the entity facts are distinct
+    assert len(rows) == len(set(rows))
 
 
 def test_per_turn_text_equality_invariant(spark):
@@ -255,7 +250,7 @@ def test_salted_linking_keeps_unmatched_surfaces(spark):
 
 def test_lineage_metrics_cover_all_quads(spark):
     t = transcripts_from_events(spark, SF)
-    quads = transcripts_to_triples(t, keep_lineage=True)
+    quads = canonical_quads(t)
     lineage = lineage_metrics(quads, n_buckets=8)
     agg = lineage.agg(
         F.sum("n_quads").alias("q"), F.sum("n_turns").alias("t"), F.sum("n_links").alias("l")
@@ -292,6 +287,14 @@ def test_resume_is_idempotent(tmp_path, spark):
     run_resumable(spark, SF, out, n_buckets=4)
     assert SnapshotTableSeq(out) == seq
 
+    # the committed lineage covers every turn and kernel quad exactly
+    # once across the killed and the resumed run
+    t = transcripts_from_events(spark, SF)
+    lineage = table.read_lineage(spark).agg(
+        F.sum("n_turns").alias("t"), F.sum("n_quads").alias("q")).first()
+    assert lineage["t"] == t.count()
+    assert lineage["q"] == canonical_quads(t).count()
+
     # an entity fact is committed once per bucket; a point lookup must
     # still return each triple once, exactly as the deduplicated read
     head = E.entity_iri(0)
@@ -300,6 +303,27 @@ def test_resume_is_idempotent(tmp_path, spark):
     assert set(looked_up) == {
         tuple(r) for r in resumed.where(F.col("subject") == head).collect()
     }
+
+
+def test_resume_runs_the_kernel_once_per_turn(tmp_path, spark, monkeypatch):
+    """Each commit runs the document kernel once per transcript row:
+    the persisted quads feed both the triple write and the lineage."""
+    from jsonld_spark.operators import kg_pipeline
+    from jsonld_spark.streaming.resume import run_resumable
+
+    docs_seen = spark.sparkContext.accumulator(0)
+    kernel_stage = kg_pipeline._kernel_stage
+
+    def counted_stage(docs, activectx, per_doc, *args, **kwargs):
+        def counted(expanded):
+            docs_seen.add(1)
+            return per_doc(expanded)
+
+        return kernel_stage(docs, activectx, counted, *args, **kwargs)
+
+    monkeypatch.setattr(kg_pipeline, "_kernel_stage", counted_stage)
+    run_resumable(spark, SF, str(tmp_path / "triples"), n_buckets=2)
+    assert docs_seen.value == transcripts_from_events(spark, SF).count()
 
 
 def SnapshotTableSeq(root):
@@ -315,9 +339,9 @@ def test_subject_bucket_partition_pruning(tmp_path, spark):
     from jsonld_spark.streaming.resume import lookup_subject, run_resumable
 
     out = str(tmp_path / "triples")
-    run_resumable(spark, SF, out, n_buckets=2, subject_buckets=8)
+    run_resumable(spark, SF, out, n_buckets=2)
     subject = E.KG + "turn/conv-00000000/0"
-    found = lookup_subject(spark, out, subject, subject_buckets=8)
+    found = lookup_subject(spark, out, subject)
     rows = found.collect()
     assert rows and all(r["subject"] == subject for r in rows)
     preds = {r["predicate"] for r in rows}
@@ -341,6 +365,8 @@ def test_docs_to_quads_error_channel(spark):
                   ' {"@id": "http://ex.org/x", "@index": "b"}]'),
         # past the parser's nesting limit (RecursionError, not ValueError)
         ("c1", 6, '{"http://v/p": ' * 2000 + '"deep"' + "}" * 2000),
+        # parses, but past the kernels' recursion depth (node map)
+        ("c1", 7, '{"http://v/p": ' * 800 + '"deep"' + "}" * 800),
     ]
     docs = spark.createDataFrame(rows, "conv_id string, turn_idx int, jsonld string")
     out = docs_to_quads(docs, context=None).collect()
@@ -353,6 +379,7 @@ def test_docs_to_quads_error_channel(spark):
     assert errors[4] == "cyclic IRI mapping"
     assert errors[5] == "conflicting indexes"
     assert errors[6] == "loading document failed"
+    assert errors[7] == "loading document failed"
 
 
 def test_multimodal_stub_and_fake_decoder(spark):
