@@ -221,12 +221,12 @@ def _quads_of(parted: DataFrame) -> DataFrame:
     return canonicalize_bnodes(quads.where(F.col("_error").isNull()).drop("_error"))
 
 
-def canonical_quads(transcripts: DataFrame, n_rows: int | None = None) -> DataFrame:
+def canonical_quads(transcripts: DataFrame) -> DataFrame:
     """S1->S6: transcripts -> the document-kernel quad stream with
     globally unique blank-node labels, keeping the lineage columns
     (conv_id, turn_idx). Unique by construction: every subject embeds
     the turn key and the kernel dedups within a document."""
-    return _quads_of(_kernel_partitioned(transcripts, n_rows))
+    return _quads_of(_kernel_partitioned(transcripts, None))
 
 
 def transcripts_to_triples(
