@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from jsonld_spark.compiler import PAYLOAD_COLUMN, sql_literal
 from jsonld_spark.sources import entities as E
 
 TURN_IRI_PREFIX = E.KG + "turn/"
@@ -35,19 +36,25 @@ PIPELINE_CONTEXT = {
 }
 
 
+def _link_map_sql() -> str:
+    """Literal MapType expression: surface -> struct(entity_id, type_term,
+    prior)."""
+    entries = ", ".join(
+        f"{sql_literal(surface)}, named_struct('entity_id', {sql_literal(row['entity_id'])}, "
+        f"'type_term', {sql_literal(row['type_term'])}, 'prior', {float(row['prior'])!r}D)"
+        for surface, row in sorted(E.resolved_link_map().items())
+    )
+    return f"map({entries})"
+
+
+# Static column expressions as SQL text, built once: built as Columns
+# call by call, each literal costs one py4j round trip (~160 ms for the
+# link map).
+_LINK_MAP_SQL = _link_map_sql()
+
+
 def _link_map_expr():
-    """Literal MapType column: surface -> struct(entity_id, type_term, prior)."""
-    entries = []
-    for surface, row in sorted(E.resolved_link_map().items()):
-        entries.append(F.lit(surface))
-        entries.append(
-            F.struct(
-                F.lit(row["entity_id"]).alias("entity_id"),
-                F.lit(row["type_term"]).alias("type_term"),
-                F.lit(float(row["prior"])).alias("prior"),
-            )
-        )
-    return F.create_map(*entries)
+    return F.expr(_LINK_MAP_SQL)
 
 
 def detect_mentions(transcripts: DataFrame) -> DataFrame:
@@ -123,55 +130,70 @@ def link_mentions_join_salted(mentions: DataFrame, dictionary: DataFrame,
                      buckets=buckets, how="left")
 
 
+_TURN_IRI_SQL = f"concat({sql_literal(TURN_IRI_PREFIX)}, conv_id, '/', turn_idx)"
+
+
+def _payload_sql() -> str:
+    """The per-turn JSON-LD document as a struct expression. Mentions
+    are blank-node objects; ``entities`` holds entity references only
+    (coerced @id strings): corpus-level entity facts (rdf:type / label)
+    are emitted by entity_triples() as a small relational distinct, so
+    the document-kernel output stays unique-by-construction and needs
+    NO global dedup shuffle."""
+    link = _LINK_MAP_SQL
+    surfaces = f"regexp_extract_all(text, {sql_literal(E.surface_pattern())}, 1)"
+    mention = (
+        "named_struct('@type', 'Mention', 'rank', i, 'surface', s, "
+        f"'score', element_at({link}, s).prior, 'target', element_at({link}, s).entity_id)"
+    )
+    return (
+        f"named_struct('@id', {_TURN_IRI_SQL}, '@type', 'Turn', "
+        "'atTime', date_format(ts, 'yyyy-MM-dd HH:mm:ss'), "
+        f"'inConversation', concat({sql_literal(CONV_IRI_PREFIX)}, conv_id), "
+        "'role', role, 'turnIndex', turn_idx, 'text', text, "
+        "'tool', CASE WHEN tool IS NOT NULL "
+        f"THEN concat({sql_literal(TOOL_IRI_PREFIX)}, tool) END, "
+        f"'mentions', transform({surfaces}, (s, i) -> {mention}), "
+        f"'entities', transform({surfaces}, s -> element_at({link}, s).entity_id))"
+    )
+
+
+_PAYLOAD_SQL = _payload_sql()
+
+
 def with_payload(transcripts: DataFrame) -> DataFrame:
-    """Attach turn/conv IRIs and the per-turn JSON-LD document.
+    """Attach the turn IRI and the per-turn JSON-LD document, both as
+    the struct ``payload`` (under PIPELINE_CONTEXT; compiled to quads by
+    jsonld_spark/compiler.py) and as its JSON text ``jsonld`` (the
+    document kernel's input).
 
-    Output: transcripts columns + (turn_iri, jsonld string).
+    Output: transcripts columns + (turn_iri, payload, jsonld).
     """
-    link = _link_map_expr()
-    turn_iri = F.concat(
-        F.lit(TURN_IRI_PREFIX), F.col("conv_id"), F.lit("/"), F.col("turn_idx")
-    )
-    conv_iri = F.concat(F.lit(CONV_IRI_PREFIX), F.col("conv_id"))
-    surfaces = F.regexp_extract_all("text", F.lit(E.surface_pattern()), 1)
-
-    mentions = F.transform(
-        surfaces,
-        lambda s, i: F.struct(
-            F.lit("Mention").alias("@type"),
-            i.alias("rank"),
-            s.alias("surface"),
-            F.element_at(link, s)["prior"].alias("score"),
-            F.element_at(link, s)["entity_id"].alias("target"),
-        ),
-    )
-    # entity references only (coerced @id strings): corpus-level entity
-    # facts (rdf:type / label) are emitted by entity_triples() as a
-    # small relational distinct, so the document-kernel output stays
-    # unique-by-construction and needs NO global dedup shuffle
-    entity_refs = F.transform(surfaces, lambda s: F.element_at(link, s)["entity_id"])
-
-    doc = F.to_json(
-        F.struct(
-            turn_iri.alias("@id"),
-            F.lit("Turn").alias("@type"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("atTime"),
-            conv_iri.alias("inConversation"),
-            F.col("role").alias("role"),
-            F.col("turn_idx").alias("turnIndex"),
-            F.col("text").alias("text"),
-            F.when(
-                F.col("tool").isNotNull(), F.concat(F.lit(TOOL_IRI_PREFIX), F.col("tool"))
-            ).alias("tool"),
-            mentions.alias("mentions"),
-            entity_refs.alias("entities"),
-        )
-    )
-    return transcripts.withColumn("turn_iri", turn_iri).withColumn("jsonld", doc)
+    return transcripts.withColumns(
+        {"turn_iri": F.expr(_TURN_IRI_SQL), PAYLOAD_COLUMN: F.expr(_PAYLOAD_SQL)}
+    ).withColumn("jsonld", F.to_json(PAYLOAD_COLUMN))
 
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+
+
+def _entity_facts_sql() -> str:
+    """Both fact rows of a mention's ``surface``, as QUAD_COLUMNS structs."""
+    e = f"element_at({_LINK_MAP_SQL}, surface)"
+    null_s = "CAST(NULL AS STRING)"
+    typed = (f"named_struct('graph', {null_s}, 'subject', {e}.entity_id, "
+             f"'predicate', {sql_literal(RDF_TYPE)}, 'obj_kind', 'iri', "
+             f"'obj_value', concat({sql_literal(E.VOCAB)}, {e}.type_term), "
+             f"'obj_type', {null_s}, 'obj_lang', {null_s})")
+    labeled = (f"named_struct('graph', {null_s}, 'subject', {e}.entity_id, "
+               f"'predicate', {sql_literal(E.VOCAB + 'label')}, 'obj_kind', 'literal', "
+               f"'obj_value', surface, 'obj_type', {sql_literal(XSD_STRING)}, "
+               f"'obj_lang', {null_s})")
+    return f"inline(array({typed}, {labeled}))"
+
+
+_ENTITY_FACTS_SQL = _entity_facts_sql()
 
 
 def entity_triples(transcripts: DataFrame) -> DataFrame:
@@ -179,43 +201,15 @@ def entity_triples(transcripts: DataFrame) -> DataFrame:
     (entity, label, surface) — via mention detection + the broadcast
     link map. Only ``text`` is consumed, so callers can pass a
     window-free text frame (sources/transcripts.transcript_texts) and
-    skip the turn-ordering shuffle entirely. The dedup is a
-    groupBy(surface) — map-side partial aggregation collapses the
-    head-entity skew to one row per surface per map task, so the
-    shuffle carries O(distinct surfaces × tasks) rows, not O(mentions)."""
-    link = _link_map_expr()
-    surfaces = (
-        transcripts.select(
-            F.explode(
-                F.regexp_extract_all("text", F.lit(E.surface_pattern()), 1)
-            ).alias("surface")
-        )
-        .groupBy("surface")
-        .agg(F.count("*").alias("_n"))
-        .drop("_n")
-        .select("surface", F.element_at(link, F.col("surface")).alias("e"))
-    )
-    null_s = F.lit(None).cast("string")
-    typed = F.struct(
-        F.col("e")["entity_id"].alias("subject"),
-        F.lit(RDF_TYPE).alias("predicate"),
-        F.lit("iri").alias("obj_kind"),
-        F.concat(F.lit(E.VOCAB), F.col("e")["type_term"]).alias("obj_value"),
-        null_s.alias("obj_type"),
-        null_s.alias("obj_lang"),
-    )
-    labeled = F.struct(
-        F.col("e")["entity_id"].alias("subject"),
-        F.lit(E.VOCAB + "label").alias("predicate"),
-        F.lit("literal").alias("obj_kind"),
-        F.col("surface").alias("obj_value"),
-        F.lit(XSD_STRING).cast("string").alias("obj_type"),
-        null_s.alias("obj_lang"),
-    )
-    # both fact rows per surface in ONE pass (a second consumer of the
-    # `surfaces` subtree would recompute the scan + regexp + groupBy)
+    skip the turn-ordering shuffle entirely. Each mention explodes to
+    its two fact rows and ONE distinct dedups them: map-side partial
+    aggregation collapses the head-entity skew to one row per fact per
+    map task, so the single shuffle carries O(distinct facts × tasks)
+    rows, not O(mentions)."""
     return (
-        surfaces.select(F.explode(F.array(typed, labeled)).alias("f"))
-        .select(null_s.alias("graph"), "f.*")
+        transcripts.selectExpr(
+            f"explode(regexp_extract_all(text, {sql_literal(E.surface_pattern())}, 1)) AS surface"
+        )
+        .selectExpr(_ENTITY_FACTS_SQL)
         .dropDuplicates()
     )

@@ -1,10 +1,15 @@
 """S3-S7: expansion kernel stage, blank-node canonicalization, and the
 end-to-end transcripts -> triples pipeline (SURVEY.md §7.0).
 
-The only Python in the hot path is one Arrow-batched ``mapInArrow``
-stage running the pure kernels (tree recursion is not expressible in
-Catalyst); everything before it (extraction/payload) and after it
-(canonicalization, dedup, serialization) is native column expressions
+The flagship runs with no Python stage: its per-turn payload is a
+struct under the static ``PIPELINE_CONTEXT``, so expansion, node map
+and toRdf are compiled to one Catalyst expression
+(jsonld_spark/compiler.py; ``payload_quads``). The Python kernels run
+in one Arrow-batched ``mapInArrow`` stage (``_kernel_stage``) for what
+the compiler does not cover — string documents, other contexts, the
+``jsonld_ops`` transforms, ``kg_parse_errors`` — and are the compiled
+path's differential oracle. Everything around them (extraction,
+canonicalization, dedup, serialization) is native column expressions
 so Catalyst/AQE plan the shuffles.
 """
 
@@ -15,12 +20,13 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jsonld_spark.compiler import PAYLOAD_COLUMN, quads_sql
 from jsonld_spark.kernel.context import initial_context, process_context
 from jsonld_spark.kernel.expand import expand_document
 from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
 from jsonld_spark.kernel.rdf import node_map_to_quads
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT, entity_triples, with_payload
-from jsonld_spark.sources.transcripts import transcripts_from_events
+from jsonld_spark.sources.transcripts import texts_of, transcripts_of
 
 QUAD_COLUMNS = ["graph", "subject", "predicate", "obj_kind", "obj_value", "obj_type", "obj_lang"]
 
@@ -152,16 +158,20 @@ def docs_to_quads(
     return _kernel_stage(docs, resolve_context(context), quads, QUAD_COLUMNS, parallelism)
 
 
-def _relabel(col, key):
+def _relabel_sql(col: str) -> str:
     """'_:bN' -> '_:h<md5(conv/turn)>nN' — content-addressed, collision
     free (128-bit key), requiring NO shuffle and no coordination: the
     scale-correct analogue of URDNA2015-style deterministic relabeling.
     """
-    c = F.col(col)
-    return F.when(
-        c.startswith("_:"),
-        F.concat(F.lit("_:h"), key, F.lit("n"), F.expr(f"substring({col}, 4)")),
-    ).otherwise(c)
+    return (f"CASE WHEN startswith({col}, '_:') THEN concat('_:h', "
+            f"md5(concat_ws('/', conv_id, turn_idx)), 'n', substring({col}, 4)) ELSE {col} END")
+
+
+_RELABELED = {
+    "subject": _relabel_sql("subject"),
+    "graph": _relabel_sql("graph"),
+    "obj_value": f"CASE WHEN obj_kind = 'iri' THEN {_relabel_sql('obj_value')} ELSE obj_value END",
+}
 
 
 def canonicalize_bnodes(quads: DataFrame) -> DataFrame:
@@ -170,14 +180,7 @@ def canonicalize_bnodes(quads: DataFrame) -> DataFrame:
     (conv_id, turn_idx) key. Pure projection — zero shuffle; compare
     ``dense_bnode_labels`` in operators/canonicalize.py for the
     reference-parity ``_:bN`` dense numbering."""
-    key = F.md5(F.concat_ws("/", "conv_id", "turn_idx"))
-    out = quads.withColumn("subject", _relabel("subject", key)).withColumn("graph", _relabel("graph", key))
-    return out.withColumn(
-        "obj_value",
-        F.when(F.col("obj_kind") == "iri", _relabel("obj_value", key)).otherwise(
-            F.col("obj_value")
-        ),
-    )
+    return quads.withColumns({col: F.expr(sql) for col, sql in _RELABELED.items()})
 
 
 TARGET_ROWS_PER_TASK = 16_000
@@ -202,30 +205,46 @@ def kernel_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
 
 
 def _kernel_partitioned(transcripts: DataFrame, n_rows: int | None) -> DataFrame:
-    """Repartition BEFORE payload assembly: payload JSON construction
-    and the kernel stage are CPU-per-row bound, and AQE's byte-based
-    coalescing of the upstream window shuffle would otherwise run them
-    on a handful of tasks (0.29 scaling efficiency 8->32 cores before;
-    near-linear after; BENCH/BASELINE.md). One shuffle covers both
-    stages. Callers that know the input cardinality cheaply (parquet
-    footer counts) pass ``n_rows``; otherwise one count() of the input
-    pays for correctly-sized CPU stages (trivial next to the kernel)."""
+    """Repartition BEFORE payload assembly: the payload and its quad
+    stage (compiled or kernel) are CPU-per-row bound, and AQE's
+    byte-based coalescing of the upstream window shuffle would
+    otherwise run them on a handful of tasks (0.29 scaling efficiency
+    8->32 cores before; near-linear after; BENCH/BASELINE.md). One
+    shuffle covers both. Callers that know the input cardinality
+    cheaply (parquet footer counts) pass ``n_rows``; otherwise one
+    count() of the input pays for correctly-sized CPU stages."""
     if n_rows is None:
         n_rows = transcripts.count()
     return transcripts.repartition(kernel_partitions(transcripts.sparkSession, n_rows))
 
 
+def payload_quads(docs: DataFrame, context: dict | None = PIPELINE_CONTEXT) -> DataFrame:
+    """(conv_id, turn_idx, *QUAD_COLUMNS) of ``with_payload`` documents
+    under ``context``, with document-local ``_:bN`` labels. A (payload
+    schema, context) pair inside the compiled subset
+    (jsonld_spark/compiler.py) explodes its Catalyst expression, with no
+    Python stage; anything else runs the kernel stage over ``jsonld``
+    and drops quarantined documents."""
+    sql = quads_sql(docs.schema[PAYLOAD_COLUMN].dataType, context)
+    if sql is None:
+        quads = docs_to_quads(docs, context, parallelism=0)
+        return quads.where(F.col("_error").isNull()).drop("_error")
+    null_s = F.lit(None).cast("string")
+    return docs.select("conv_id", "turn_idx", F.explode(F.expr(sql)).alias("q")).select(
+        "conv_id", "turn_idx", null_s.alias("graph"), "q.subject", "q.predicate",
+        "q.obj_kind", "q.obj_value", "q.obj_type", null_s.alias("obj_lang"),
+    )
+
+
 def _quads_of(parted: DataFrame) -> DataFrame:
-    quads = docs_to_quads(with_payload(parted), parallelism=0)
-    # quarantined documents carry no quads
-    return canonicalize_bnodes(quads.where(F.col("_error").isNull()).drop("_error"))
+    return canonicalize_bnodes(payload_quads(with_payload(parted)))
 
 
 def canonical_quads(transcripts: DataFrame) -> DataFrame:
-    """S1->S6: transcripts -> the document-kernel quad stream with
+    """S1->S6: transcripts -> the per-document quad stream with
     globally unique blank-node labels, keeping the lineage columns
     (conv_id, turn_idx). Unique by construction: every subject embeds
-    the turn key and the kernel dedups within a document."""
+    the turn key and values are merged within a document."""
     return _quads_of(_kernel_partitioned(transcripts, None))
 
 
@@ -236,7 +255,7 @@ def transcripts_to_triples(
 ) -> DataFrame:
     """Full S1->S7: transcripts -> the canonical triple set.
 
-    The kernel stream (``canonical_quads``) flows to the sink with NO
+    The quad stream (``canonical_quads``) flows to the sink with NO
     global dropDuplicates; the only cross-turn repeats are the
     corpus-level entity facts, emitted relationally by
     ``entity_triples`` as a small distinct. Entity facts need only
@@ -249,17 +268,17 @@ def transcripts_to_triples(
 
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship query: events-derived transcripts -> triple set."""
+    """The flagship query: events-derived transcripts -> triple set.
+    One ``events`` DataFrame feeds the footer count, the transcripts
+    and the window-free texts (one parquet schema inference, not
+    three)."""
     from jsonld_spark.plans.session import read_table
-    from jsonld_spark.sources.transcripts import transcript_texts
 
+    events = read_table(spark, sf_dir, "events")
     # row count from parquet footers (metadata-only job) sizes the
     # CPU-stage partitioning without traversing the data
-    n_rows = read_table(spark, sf_dir, "events").count()
     return transcripts_to_triples(
-        transcripts_from_events(spark, sf_dir),
-        texts=transcript_texts(spark, sf_dir),
-        n_rows=n_rows,
+        transcripts_of(events), texts=texts_of(events), n_rows=events.count()
     )
 
 

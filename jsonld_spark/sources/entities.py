@@ -108,6 +108,8 @@ def resolved_link_map() -> dict[str, dict]:
 
 def surface_pattern() -> str:
     """Regex alternation matching every known surface form (used for
-    batched mention detection). Longest-first so aliases never shadow."""
-    surfaces = sorted({r["surface"] for r in dictionary_rows()}, key=len, reverse=True)
+    batched mention detection). Longest-first so aliases never shadow;
+    equal lengths in lexical order, so the pattern does not depend on
+    set iteration order (PYTHONHASHSEED)."""
+    surfaces = sorted({r["surface"] for r in dictionary_rows()}, key=lambda s: (-len(s), s))
     return "(" + "|".join(surfaces) + ")"

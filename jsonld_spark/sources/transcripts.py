@@ -19,9 +19,9 @@ the alias surface when the entity has one and (event_id + j) % 5 == 0.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
+from jsonld_spark.compiler import sql_literal
 from jsonld_spark.plans.session import read_table
 from jsonld_spark.sources import entities as E
 
@@ -32,77 +32,71 @@ TEXT_SEP = [" then ", " after "]
 TEXT_SUFFIX = " done."
 
 
-def _mention_entity_index(event_id, j: int):
-    """Column expr: entity index for mention j of a turn (skewed)."""
-    return F.when((event_id + j) % 3 == 0, F.lit(0)).otherwise(
-        (event_id * 7 + j * 13) % E.N_ENTITIES
+def _mention_surface_sql(j: int) -> str:
+    """SQL: the surface form used for mention j of a turn — entity index
+    0 when (event_id + j) % 3 == 0 (the head-entity skew), else
+    (event_id*7 + j*13) % N_ENTITIES; aliased entities use their alias
+    when (event_id + j) % 5 == 0."""
+    idx = (f"(CASE WHEN (event_id + {j}) % 3 = 0 THEN 0 "
+           f"ELSE (event_id * 7 + {j * 13}) % {E.N_ENTITIES} END)")
+    surfaces = ", ".join(sql_literal(E.primary_surface(i)) for i in range(E.N_ENTITIES))
+    aliases = ", ".join(sql_literal(E.alias_surface(i)) for i in range(E.N_ALIASED))
+    return (
+        f"CASE WHEN {idx} < {E.N_ALIASED} AND (event_id + {j}) % 5 = 0 "
+        f"THEN element_at(array({aliases}), CAST({idx} + 1 AS INT)) "
+        f"ELSE element_at(array({surfaces}), CAST({idx} + 1 AS INT)) END"
     )
 
 
-def _mention_surface(event_id, j: int):
-    """Column expr: surface form used for mention j."""
-    idx = _mention_entity_index(event_id, j)
-    surfaces = F.array(*[F.lit(E.primary_surface(i)) for i in range(E.N_ENTITIES)])
-    aliases = F.array(*[F.lit(E.alias_surface(i)) for i in range(E.N_ALIASED)])
-    use_alias = (idx < E.N_ALIASED) & ((event_id + j) % 5 == 0)
-    return F.when(use_alias, F.element_at(aliases, (idx + 1).cast("int"))).otherwise(
-        F.element_at(surfaces, (idx + 1).cast("int"))
+def _text_sql() -> str:
+    """The turn-text expression (depends only on event_id)."""
+    s0, s1, s2 = (_mention_surface_sql(j) for j in range(3))
+    n_mentions = "(event_id % 3 + 1)"
+    return (
+        f"concat({sql_literal(TEXT_PREFIX)}, {s0}, "
+        f"CASE WHEN {n_mentions} > 1 THEN concat({sql_literal(TEXT_SEP[0])}, {s1}) ELSE '' END, "
+        f"CASE WHEN {n_mentions} > 2 THEN concat({sql_literal(TEXT_SEP[1])}, {s2}) ELSE '' END, "
+        f"{sql_literal(TEXT_SUFFIX)})"
     )
+
+
+# The derivation as Spark SQL text, built once: built as Columns call by
+# call, each literal costs one py4j round trip (~130 ms for the text).
+_CONV_ID_SQL = "concat('conv-', lpad(CAST(user_id AS STRING), 8, '0'))"
+_ROLE_SQL = (f"element_at(array({', '.join(sql_literal(r) for r in ROLES)}), "
+             "CAST(event_id % 4 + 1 AS INT))")
+_TEXT_SQL = _text_sql()
+_TRANSCRIPT_SQL = [
+    f"{_CONV_ID_SQL} AS conv_id",
+    "CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx",
+    f"{_ROLE_SQL} AS role",
+    f"{_TEXT_SQL} AS text",
+    f"CASE WHEN event_type IN ({', '.join(sql_literal(t) for t in TOOL_EVENT_TYPES)}) "
+    "THEN event_type END AS tool",
+    "ts",
+]
+
+
+def transcripts_of(events: DataFrame) -> DataFrame:
+    """events -> transcripts, fully JVM-side and deterministic."""
+    return events.selectExpr(*_TRANSCRIPT_SQL)
+
+
+def texts_of(events: DataFrame) -> DataFrame:
+    """Just the text column, WITHOUT the row_number window: text
+    depends only on event_id, so consumers that need no turn ordering
+    (e.g. corpus-level entity facts) skip the window shuffle entirely."""
+    return events.selectExpr(f"{_TEXT_SQL} AS text")
 
 
 def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events -> transcripts, fully JVM-side and deterministic."""
-    ev = read_table(spark, sf_dir, "events")
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-
-    return ev.select(
-        _conv_id_expr().alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        _role_expr().alias("role"),
-        _text_expr().alias("text"),
-        F.when(
-            F.col("event_type").isin(TOOL_EVENT_TYPES), F.col("event_type")
-        ).alias("tool"),
-        F.col("ts"),
-    )
-
-
-def _conv_id_expr():
-    """The conversation-id column expression (user_id-derived)."""
-    return F.concat(
-        F.lit("conv-"), F.lpad(F.col("user_id").cast("string"), 8, "0")
-    )
-
-
-def _role_expr():
-    """The role column expression (event_id-derived)."""
-    return F.element_at(
-        F.array(*[F.lit(r) for r in ROLES]), (F.col("event_id") % 4 + 1).cast("int")
-    )
-
-
-def _text_expr():
-    """The turn-text column expression (depends only on event_id)."""
-    eid = F.col("event_id")
-    n_mentions = (eid % 3 + 1).cast("int")
-    s0, s1, s2 = (_mention_surface(eid, j) for j in range(3))
-    return F.concat(
-        F.lit(TEXT_PREFIX),
-        s0,
-        F.when(n_mentions > 1, F.concat(F.lit(TEXT_SEP[0]), s1)).otherwise(F.lit("")),
-        F.when(n_mentions > 2, F.concat(F.lit(TEXT_SEP[1]), s2)).otherwise(F.lit("")),
-        F.lit(TEXT_SUFFIX),
-    )
+    """``transcripts_of`` the ``events`` table under ``sf_dir``."""
+    return transcripts_of(read_table(spark, sf_dir, "events"))
 
 
 def transcript_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Just the text column, events-derived WITHOUT the row_number
-    window: text depends only on event_id, so consumers that need no
-    turn ordering (e.g. corpus-level entity facts) skip the window
-    shuffle entirely."""
-    ev = read_table(spark, sf_dir, "events")
-    return ev.select(_text_expr().alias("text"))
+    """``texts_of`` the ``events`` table under ``sf_dir``."""
+    return texts_of(read_table(spark, sf_dir, "events"))
 
 
 def transcript_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,11 +105,8 @@ def transcript_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips the row_number window entirely: none of conv_id / role / text
     needs turn ordering, so at 100 TB this is a pure narrow scan-side
     projection with zero shuffle before the consumer's aggregation."""
-    ev = read_table(spark, sf_dir, "events")
-    return ev.select(
-        _conv_id_expr().alias("conv_id"),
-        _role_expr().alias("role"),
-        _text_expr().alias("text"),
+    return read_table(spark, sf_dir, "events").selectExpr(
+        f"{_CONV_ID_SQL} AS conv_id", f"{_ROLE_SQL} AS role", f"{_TEXT_SQL} AS text"
     )
 
 

@@ -306,24 +306,30 @@ def test_resume_is_idempotent(tmp_path, spark):
 
 
 def test_resume_runs_the_kernel_once_per_turn(tmp_path, spark, monkeypatch):
-    """Each commit runs the document kernel once per transcript row:
-    the persisted quads feed both the triple write and the lineage."""
+    """Each commit computes every turn's quads once: the persisted
+    quads feed both the triple write and the lineage. The compiled quad
+    expression has no Python hook, so the rows leaving it are counted
+    by a pass-through Arrow stage."""
     from jsonld_spark.operators import kg_pipeline
     from jsonld_spark.streaming.resume import run_resumable
 
-    docs_seen = spark.sparkContext.accumulator(0)
-    kernel_stage = kg_pipeline._kernel_stage
+    expected = canonical_quads(transcripts_from_events(spark, SF)).count()
+    rows_seen = spark.sparkContext.accumulator(0)
+    payload_quads = kg_pipeline.payload_quads
 
-    def counted_stage(docs, activectx, per_doc, *args, **kwargs):
-        def counted(expanded):
-            docs_seen.add(1)
-            return per_doc(expanded)
+    def counted_quads(docs, *args, **kwargs):
+        quads = payload_quads(docs, *args, **kwargs)
 
-        return kernel_stage(docs, activectx, counted, *args, **kwargs)
+        def count(batches):
+            for batch in batches:
+                rows_seen.add(batch.num_rows)
+                yield batch
 
-    monkeypatch.setattr(kg_pipeline, "_kernel_stage", counted_stage)
+        return quads.mapInArrow(count, quads.schema)
+
+    monkeypatch.setattr(kg_pipeline, "payload_quads", counted_quads)
     run_resumable(spark, SF, str(tmp_path / "triples"), n_buckets=2)
-    assert docs_seen.value == transcripts_from_events(spark, SF).count()
+    assert rows_seen.value == expected
 
 
 def SnapshotTableSeq(root):

@@ -32,26 +32,47 @@ def physical_plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
 
 
-def test_kernel_stage_runs_once(spark):
-    """The Python kernel is the expensive stage; the plan must contain
-    exactly one of it (the first split-dedup design accidentally ran
-    it per Union branch)."""
+PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def compiled_quads_at(plan: str) -> int:
+    """Offset of the explode of the compiled quad expression (the
+    Generate whose expression issues ``_:b`` labels), or -1."""
+    start = plan.find("Generate explode(")
+    while start >= 0 and "_:b" not in plan[start:plan.find("\n", start)]:
+        start = plan.find("Generate explode(", start + 1)
+    return start
+
+
+def test_flagship_has_no_python_stage(spark):
+    """The flagship's payload is compiled to Catalyst
+    (jsonld_spark/compiler.py): the kg_triples plan holds no Python
+    node at all."""
     plan = physical_plan_of(kg_triples(spark, SF))
-    n = plan.count("MapInArrow") + plan.count("MapInPandas")
-    assert n == 1, plan
+    assert compiled_quads_at(plan) >= 0, plan
+    for node in PYTHON_NODES:
+        assert node not in plan, plan
+
+
+def test_kernel_stage_runs_once(spark):
+    """The Python kernel path (docs_to_quads: string documents, and the
+    compiler's differential oracle) runs exactly one Python stage (the
+    first split-dedup design accidentally ran it per Union branch)."""
+    from jsonld_spark.operators.extract import with_payload
+    from jsonld_spark.operators.kg_pipeline import docs_to_quads
+    from jsonld_spark.sources.transcripts import transcripts_from_events
+
+    plan = physical_plan_of(docs_to_quads(with_payload(transcripts_from_events(spark, SF))))
+    assert sum(plan.count(node) for node in PYTHON_NODES) == 1, plan
 
 
 def test_no_global_distinct_on_kernel_stream(spark):
     """Set semantics come from per-turn uniqueness + the small entity
-    distinct — there must be no aggregate directly over the kernel
-    output columns (conv_id-keyed stream)."""
+    distinct — the only aggregate in the flagship plan is the entity
+    distinct (partial + final), none over the quad stream."""
     plan = physical_plan_of(kg_triples(spark, SF))
-    kernel_idx = max(plan.find("MapInArrow"), plan.find("MapInPandas"))
-    above_kernel = plan[:kernel_idx]
-    # the only aggregates above the kernel in tree order belong to the
-    # entity branch; the kernel branch feeds the Union directly
     assert "Union" in plan
-    assert above_kernel.count("HashAggregate") <= 2  # entity distinct only
+    assert plan.count("HashAggregate") <= 2, plan
 
 
 def test_shipdate_filter_is_pushed_down(spark):
@@ -66,12 +87,13 @@ def test_dimension_join_is_broadcast(spark):
 
 
 def test_kernel_stage_parallelism_is_explicit(spark):
-    """The repartition before the CPU-bound stages must survive:
-    without it AQE byte-coalescing strangles the kernel stage."""
-    tri = kg_triples(spark, SF)
-    plan = physical_plan_of(tri)
-    kernel_idx = max(plan.find("MapInArrow"), plan.find("MapInPandas"))
-    assert "Exchange RoundRobinPartitioning" in plan[kernel_idx:], plan
+    """The repartition before the CPU-bound payload + compiled quad
+    stage must survive: without it AQE byte-coalescing strangles that
+    stage."""
+    plan = physical_plan_of(kg_triples(spark, SF))
+    quads_idx = compiled_quads_at(plan)
+    assert quads_idx >= 0, plan
+    assert "Exchange RoundRobinPartitioning" in plan[quads_idx:], plan
 
 
 def test_simhash_guard_is_pushed_to_scan(spark):
