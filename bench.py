@@ -116,8 +116,8 @@ def build_session(cores: int):
 def replicated_transcripts(spark, replicas: int):
     """(df, n_rows): the SF_DIR transcript corpus replicated
     ``replicas``x with distinct conv ids per replica — the ONE copy of
-    the replication recipe shared by --scaling, --stress and --graph
-    (diverging copies would make their numbers non-comparable)."""
+    the replication recipe shared by --scaling, --stress, --graph and
+    --skew (diverging copies would make their numbers non-comparable)."""
     from pyspark.sql import functions as F
 
     from jsonld_spark.sources.transcripts import transcripts_from_events
@@ -298,22 +298,16 @@ def main() -> None:
                 "spark.ui.showConsoleProgress": "false",
             },
         )
-        from pyspark.sql import functions as F
-
         from jsonld_spark.operators.extract import (
             detect_mentions,
             dictionary_df,
             link_mentions_join_salted,
             resolve_dictionary,
         )
-        from jsonld_spark.sources.transcripts import transcripts_from_events
 
         replicas = int(os.environ.get("SPARK_GRAFT_SKEW_REPLICAS", "16"))
         reps = int(os.environ.get("SPARK_GRAFT_SKEW_REPS", "3"))
-        base = transcripts_from_events(spark, SF_DIR)
-        scaled = base.crossJoin(
-            spark.range(replicas).select(F.col("id").alias("replica"))
-        ).withColumn("conv_id", F.concat_ws("-", "conv_id", "replica")).drop("replica")
+        scaled, _ = replicated_transcripts(spark, replicas)
         # materialize the mention table so the timed section measures
         # the JOIN, not the upstream regexp extraction
         mentions = detect_mentions(scaled).cache()

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from jsonld_spark.operators.kg_pipeline import QUAD_COLUMNS as _QUAD_COLS
+
 
 def two_phase_row_index(
     df: DataFrame, order_cols: list[str], index_col: str = "idx", num_partitions: int | None = None
@@ -156,8 +158,6 @@ DATASET_URDNA_SCHEMA = (
     "obj_kind string, obj_value string, obj_type string, obj_lang string, "
     "s_n int, o_n int, g_n int, fp string"
 )
-_QUAD_COLS = ["graph", "subject", "predicate", "obj_kind", "obj_value",
-              "obj_type", "obj_lang"]
 
 
 def urdna_dataset_labels(quads: DataFrame) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jsonld_spark.compiler import PAYLOAD_COLUMN, sql_literal
+from jsonld_spark.kernel.rdf import RDF_TYPE, XSD_STRING
 from jsonld_spark.sources import entities as E
 
 TURN_IRI_PREFIX = E.KG + "turn/"
@@ -172,10 +173,6 @@ def with_payload(transcripts: DataFrame) -> DataFrame:
     return transcripts.withColumns(
         {"turn_iri": F.expr(_TURN_IRI_SQL), PAYLOAD_COLUMN: F.expr(_PAYLOAD_SQL)}
     ).withColumn("jsonld", F.to_json(PAYLOAD_COLUMN))
-
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 
 def _entity_facts_sql() -> str:

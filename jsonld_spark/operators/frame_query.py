@@ -53,11 +53,10 @@ from pyspark.sql import functions as F
 
 from jsonld_spark.kernel.context import FRAMING_KEYWORDS
 from jsonld_spark.kernel.rdf import (
+    RDF_TYPE,
     XSD_STRING,
     value_object_to_literal,
 )
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 class _NeedsJoinPath(Exception):

@@ -331,7 +331,8 @@ def _pagerank_core(
     # -> 1.3 s vs the node-table distinct; r5: one explode scan halves
     # the two-projection form's cold cost, 2.6 s -> 1.1 s — profiling
     # showed THIS subplan, not per-round work or the esrc build, was
-    # the residual PPR-vs-PR gap, tools/profile_ppr.py)
+    # the residual PPR-vs-PR gap: BENCH/BASELINE.md "Personalized
+    # PageRank")
     seed_nodes = seeds.select("node").distinct()
     # endpoint scan over esrc, not e (r6): esrc carries the same edge
     # rows, so this keeps the caller's edge cache at one consumer —

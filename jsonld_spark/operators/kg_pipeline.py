@@ -24,7 +24,7 @@ from jsonld_spark.compiler import PAYLOAD_COLUMN, quads_sql
 from jsonld_spark.kernel.context import initial_context, process_context
 from jsonld_spark.kernel.expand import expand_document
 from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
-from jsonld_spark.kernel.rdf import node_map_to_quads
+from jsonld_spark.kernel.rdf import XSD_STRING, node_map_to_quads
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT, entity_triples, with_payload
 from jsonld_spark.sources.transcripts import texts_of, transcripts_of
 
@@ -287,8 +287,6 @@ def nquads_lines(triples: DataFrame) -> DataFrame:
     (reference: NQuads.php:25-66 — bare ``_:`` bnodes, ``\\n``/``"``
     escaping, ^^type except implied xsd:string, @lang, optional graph).
     """
-    xsd_string = "http://www.w3.org/2001/XMLSchema#string"
-
     def term(col):
         c = F.col(col)
         return F.when(c.startswith("_:"), c).otherwise(F.concat(F.lit("<"), c, F.lit(">")))
@@ -305,7 +303,7 @@ def nquads_lines(triples: DataFrame) -> DataFrame:
             F.lit('"'),
             F.when(F.col("obj_lang").isNotNull(), F.concat(F.lit("@"), F.col("obj_lang")))
             .when(
-                F.col("obj_type").isNotNull() & (F.col("obj_type") != xsd_string),
+                F.col("obj_type").isNotNull() & (F.col("obj_type") != XSD_STRING),
                 F.concat(F.lit("^^<"), F.col("obj_type"), F.lit(">")),
             )
             .otherwise(F.lit("")),

@@ -126,18 +126,6 @@ def entity_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("label").alias("component"))
 
 
-def adjacency(spark: SparkSession, sf_dir: str, triples: DataFrame | None = None) -> DataFrame:
-    """Forward adjacency summary keyed by subject (the materialized
-    adjacency table is this groupBy + collect_list; counts here keep
-    the oracle exact)."""
-    if triples is None:
-        triples = kg_triples(spark, sf_dir)
-    return triples.groupBy("subject").agg(
-        F.countDistinct("predicate").alias("n_predicates"),
-        F.count("*").alias("n_values"),
-    )
-
-
 def characteristic_sets(
     spark: SparkSession, sf_dir: str, triples: DataFrame | None = None
 ) -> DataFrame:

@@ -196,9 +196,10 @@ def _toks():
 
 
 def token_stat_cols() -> list:
-    """The token-counting metric expressions over a ``text`` column —
-    shared by the standalone operator and the single-scan
-    text_stats_suite projection."""
+    """Per-document token counting over a ``text`` column: whitespace
+    tokens, distinct tokens, a BPE-ish sub-token estimate (runs of
+    letters/digits), char count — projected by text_stats_suite's
+    single scan; ``token_stats_sql`` is its oracle."""
     toks = _toks()
     subtoks = F.regexp_extract_all("text", F.lit(r"([A-Za-z]+|[0-9]+)"), 1)
     return [
@@ -207,13 +208,6 @@ def token_stat_cols() -> list:
         F.size(subtoks).alias("n_subtokens"),
         F.length("text").alias("n_chars"),
     ]
-
-
-def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token counting: whitespace tokens, distinct tokens,
-    a BPE-ish sub-token estimate (runs of letters/digits), char count."""
-    docs = read_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", *token_stat_cols())
 
 
 def token_stats_sql() -> str:
@@ -227,8 +221,10 @@ FROM documents"""
 
 
 def quality_score_cols() -> list:
-    """The quality-ratio expressions over a ``text`` column (see
-    token_stat_cols)."""
+    """Heuristic quality signals over a ``text`` column: stopword
+    ratio, mean token length, alpha ratio — int/int divisions,
+    engine-exact (see token_stat_cols; ``quality_scores_sql`` is the
+    oracle)."""
     toks = _toks()
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
@@ -238,16 +234,6 @@ def quality_score_cols() -> list:
         (F.length("text") / F.size(toks)).alias("chars_per_token"),
         (n_alpha / F.length("text")).alias("alpha_ratio"),
     ]
-
-
-def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic quality signals: stopword ratio, mean token length,
-    alpha ratio. Ratios are int/int divisions — engine-exact."""
-    docs = read_table(spark, sf_dir, "documents")
-    toks = _toks()
-    return docs.select(
-        "doc_id", F.size(toks).alias("n_tokens"), *quality_score_cols()
-    )
 
 
 def quality_scores_sql() -> str:

@@ -12,13 +12,10 @@ SQL golden built here from the same single source of truth.
 
 from __future__ import annotations
 
+from jsonld_spark.kernel.rdf import RDF_TYPE, XSD_DOUBLE, XSD_INTEGER, XSD_STRING
 from jsonld_spark.sources import entities as E
 from jsonld_spark.sources.transcripts import transcripts_sql, transcripts_text_sql
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
-XSD_DOUBLE = "http://www.w3.org/2001/XMLSchema#double"
 V = E.VOCAB
 
 
@@ -664,14 +661,13 @@ def kg_frame_turn_explicit_sql() -> str:
     frame-named predicates (rdf:type for "@type", plus the tool edge)
     — @explicit:true keeps only filter-matched properties and skips
     addMissingNodeProperties (Processor.php:2543 + 2780-2811)."""
-    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
     return (
         base_ctes()
         + f"""
 , triples AS ({triples_select()})
 SELECT * FROM triples
 WHERE subject IN (SELECT turn_iri FROM turns WHERE tool IS NOT NULL)
-  AND predicate IN ('{rdf_type}', '{V}tool')"""
+  AND predicate IN ('{RDF_TYPE}', '{V}tool')"""
     )
 
 
