@@ -242,14 +242,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _docs(spark, sf):
         return with_payload(transcripts_from_events(spark, sf))
 
-    def _n_turns(spark, sf):
-        # parquet-footer count (metadata-only job) sizes the CPU stage
-        # without an extra pass over the derived transcript stream —
-        # same policy as kg_triples (VERDICT r2 #5)
-        from jsonld_spark.plans.session import read_table
-
-        return read_table(spark, sf, "events").count()
-
     # several queries consume the pipeline output; cache it per
     # (session, sf) so the driver's sweep runs the kernel stage once
     cache: dict = {}
@@ -273,12 +265,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # The per-turn payload is built by pure column exprs, so each
         # transform's full JSON output (json.dumps sort_keys form) is
         # reproduced exactly by a DuckDB oracle (sources/oracle.py)
-        "jsonld_expand_docs": lambda spark, sf: jsonld_ops.expand_documents(
-            _docs(spark, sf), n_rows=_n_turns(spark, sf)),
-        "jsonld_compact_docs": lambda spark, sf: jsonld_ops.compact_documents(
-            _docs(spark, sf), n_rows=_n_turns(spark, sf)),
-        "jsonld_flatten_docs": lambda spark, sf: jsonld_ops.flatten_documents(
-            _docs(spark, sf), n_rows=_n_turns(spark, sf)),
+        "jsonld_expand_docs": lambda spark, sf: jsonld_ops.expand_documents(_docs(spark, sf)),
+        "jsonld_compact_docs": lambda spark, sf: jsonld_ops.compact_documents(_docs(spark, sf)),
+        "jsonld_flatten_docs": lambda spark, sf: jsonld_ops.flatten_documents(_docs(spark, sf)),
         "jsonld_fromrdf_nodes": lambda spark, sf: jsonld_ops.from_rdf_nodes(
             cached_triples(spark, sf), use_native_types=True
         ),

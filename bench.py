@@ -114,22 +114,22 @@ def build_session(cores: int):
 
 
 def replicated_transcripts(spark, replicas: int):
-    """(df, n_rows): the SF_DIR transcript corpus replicated
-    ``replicas``x with distinct conv ids per replica — the ONE copy of
-    the replication recipe shared by --scaling, --stress, --graph and
-    --skew (diverging copies would make their numbers non-comparable)."""
+    """The SF_DIR transcript corpus replicated ``replicas``x with
+    distinct conv ids per replica — the ONE copy of the replication
+    recipe shared by --scaling, --stress, --graph and --skew (diverging
+    copies would make their numbers non-comparable). One partition per
+    replica streams against the broadcast base, so the replicated rows
+    spread over ``replicas`` tasks, not one."""
     from pyspark.sql import functions as F
 
     from jsonld_spark.sources.transcripts import transcripts_from_events
 
     base = transcripts_from_events(spark, SF_DIR)
-    n_rows = base.count() * replicas
-    scaled = base.crossJoin(
-        spark.range(replicas).select(F.col("id").alias("replica"))
-    ).withColumn(
+    return spark.range(replicas, numPartitions=replicas).select(
+        F.col("id").alias("replica")
+    ).crossJoin(F.broadcast(base)).withColumn(
         "conv_id", F.concat_ws("-", "conv_id", "replica")
     ).drop("replica")
-    return scaled, n_rows
 
 
 def timed_replicated_pipeline(spark, replicas: int) -> tuple[int, float]:
@@ -139,8 +139,8 @@ def timed_replicated_pipeline(spark, replicas: int) -> tuple[int, float]:
     from jsonld_spark.operators.kg_pipeline import kg_triples, transcripts_to_triples
 
     kg_triples(spark, "/root/testdata/sf0.001").count()  # warm-up
-    scaled, n_rows = replicated_transcripts(spark, replicas)
-    df = transcripts_to_triples(scaled, n_rows=n_rows)
+    # transcripts_to_triples counts its input here, before t0
+    df = transcripts_to_triples(replicated_transcripts(spark, replicas))
     t0 = time.time()
     n = df.count()
     return n, time.time() - t0
@@ -224,8 +224,7 @@ def main() -> None:
         replicas = int(os.environ.get("SPARK_GRAFT_GRAPH_REPLICAS", "1"))
         spark = build_session(CPUS)
         if replicas > 1:
-            scaled, n_rows = replicated_transcripts(spark, replicas)
-            tri = transcripts_to_triples(scaled, n_rows=n_rows).cache()
+            tri = transcripts_to_triples(replicated_transcripts(spark, replicas)).cache()
         else:
             tri = kg_triples(spark, SF_DIR).cache()
         tri.count()  # build the triple cache outside the timed section
@@ -307,7 +306,7 @@ def main() -> None:
 
         replicas = int(os.environ.get("SPARK_GRAFT_SKEW_REPLICAS", "16"))
         reps = int(os.environ.get("SPARK_GRAFT_SKEW_REPS", "3"))
-        scaled, _ = replicated_transcripts(spark, replicas)
+        scaled = replicated_transcripts(spark, replicas)
         # materialize the mention table so the timed section measures
         # the JOIN, not the upstream regexp extraction
         mentions = detect_mentions(scaled).cache()

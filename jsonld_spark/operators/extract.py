@@ -196,9 +196,10 @@ _ENTITY_FACTS_SQL = _entity_facts_sql()
 def entity_triples(transcripts: DataFrame) -> DataFrame:
     """Corpus-level entity facts — (entity, rdf:type, Type) and
     (entity, label, surface) — via mention detection + the broadcast
-    link map. Only ``text`` is consumed, so callers can pass a
-    window-free text frame (sources/transcripts.transcript_texts) and
-    skip the turn-ordering shuffle entirely. Each mention explodes to
+    link map. Only ``text`` is consumed, so over
+    ``transcripts_from_events`` Catalyst prunes the turn-ordering
+    window and this branch reads ``events`` with no shuffle before its
+    own distinct. Each mention explodes to
     its two fact rows and ONE distinct dedups them: map-side partial
     aggregation collapses the head-entity skew to one row per fact per
     map task, so the single shuffle carries O(distinct facts × tasks)

@@ -19,37 +19,30 @@ from pyspark.sql import functions as F
 from jsonld_spark.kernel.compaction import compact_element, create_inverse_context
 from jsonld_spark.kernel.rdf import Quad
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT
-from jsonld_spark.operators.kg_pipeline import _kernel_stage, kernel_partitions, resolve_context
+from jsonld_spark.operators.kg_pipeline import _kernel_stage, kernel_partitioned, resolve_context
 from jsonld_spark.plans.session import ensure_package_shipped
 
 
-def _documents(docs: DataFrame, activectx: dict, fn, base: str | None,
-               n_rows: int | None) -> DataFrame:
+def _documents(docs: DataFrame, activectx: dict, fn, base: str | None) -> DataFrame:
     """(conv_id, turn_idx, doc): ``fn`` of each expanded document as
     sorted-key JSON; a missing or quarantined document gets doc = NULL.
-
-    CPU-bound per-document stage: partitioned by data volume with a
-    cores floor (``kernel_partitions``). Callers that know the
-    cardinality cheaply (parquet footer counts) pass n_rows; otherwise
-    one count() of the input pays for it."""
-    if n_rows is None:
-        n_rows = docs.count()
+    The CPU-bound stage is sized by ``kernel_partitioned`` from the
+    input's own row count."""
     return _kernel_stage(
-        docs, activectx, lambda expanded: [(json.dumps(fn(expanded), sort_keys=True),)],
-        ["doc"], kernel_partitions(docs.sparkSession, n_rows), base,
+        kernel_partitioned(docs), activectx,
+        lambda expanded: [(json.dumps(fn(expanded), sort_keys=True),)], ["doc"], base,
     ).drop("_error")
 
 
 def expand_documents(docs: DataFrame, context: dict | None = PIPELINE_CONTEXT,
-                     base: str | None = None, n_rows: int | None = None) -> DataFrame:
+                     base: str | None = None) -> DataFrame:
     """Per-document expansion (JsonLD::expand over a corpus)."""
-    return _documents(docs, resolve_context(context, base), lambda expanded: expanded,
-                      base, n_rows)
+    return _documents(docs, resolve_context(context, base), lambda expanded: expanded, base)
 
 
 def compact_documents(docs: DataFrame, context: dict | None = None,
                       expand_context: dict | None = PIPELINE_CONTEXT,
-                      base: str | None = None, n_rows: int | None = None) -> DataFrame:
+                      base: str | None = None) -> DataFrame:
     """Per-document expand-then-compact (JsonLD::compact over a corpus).
     The inverse context is built once on the driver and shipped."""
     context = context if context is not None else dict(expand_context or {})
@@ -59,11 +52,11 @@ def compact_documents(docs: DataFrame, context: dict | None = None,
     def fn(expanded):
         return compact_element(expanded, compact_ctx, inversectx, None, True)
 
-    return _documents(docs, resolve_context(expand_context, base), fn, base, n_rows)
+    return _documents(docs, resolve_context(expand_context, base), fn, base)
 
 
 def flatten_documents(docs: DataFrame, context: dict | None = PIPELINE_CONTEXT,
-                      base: str | None = None, n_rows: int | None = None) -> DataFrame:
+                      base: str | None = None) -> DataFrame:
     """Per-document flatten (JsonLD::flatten over a corpus)."""
 
     def fn(expanded):
@@ -78,7 +71,7 @@ def flatten_documents(docs: DataFrame, context: dict | None = PIPELINE_CONTEXT,
         return [default_graph[k] for k in php_ksort_keys(default_graph)
                 if len(default_graph[k]) > 1]
 
-    return _documents(docs, resolve_context(context, base), fn, base, n_rows)
+    return _documents(docs, resolve_context(context, base), fn, base)
 
 
 FROMRDF_SCHEMA = "graph string, subject string, node string"

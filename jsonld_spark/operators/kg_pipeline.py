@@ -26,7 +26,7 @@ from jsonld_spark.kernel.expand import expand_document
 from jsonld_spark.kernel.nodemap import BlankNodeIssuer, build_node_map
 from jsonld_spark.kernel.rdf import XSD_STRING, node_map_to_quads
 from jsonld_spark.operators.extract import PIPELINE_CONTEXT, entity_triples, with_payload
-from jsonld_spark.sources.transcripts import texts_of, transcripts_of
+from jsonld_spark.sources.transcripts import transcripts_from_events
 
 QUAD_COLUMNS = ["graph", "subject", "predicate", "obj_kind", "obj_value", "obj_type", "obj_lang"]
 
@@ -47,7 +47,6 @@ def _kernel_stage(
     activectx: dict,
     per_doc,
     columns: list[str],
-    parallelism: int | None = None,
     base: str | None = None,
 ) -> DataFrame:
     """The one per-document kernel stage: parse -> expand -> ``per_doc``
@@ -66,8 +65,8 @@ def _kernel_stage(
     code of any ``JsonLdError`` raised by expansion or ``per_doc``. Any
     other exception fails the job.
 
-    ``parallelism``: None repartitions to ``kernel_partitions``' floor,
-    0 means the caller already partitioned, n repartitions to n.
+    The stage runs on ``docs``' partitioning; callers size it with
+    ``kernel_partitioned``.
     """
     from jsonld_spark.plans.session import ensure_package_shipped
 
@@ -124,14 +123,7 @@ def _kernel_stage(
             )
 
     # Column pruning: ship only the three needed columns into Arrow.
-    # AQE sizes shuffle partitions by BYTES (64 MiB advisory), but this
-    # stage's cost is per-row CPU, so a byte-small input would coalesce
-    # to a handful of tasks and stop scaling with cores.
     pruned = docs.select("conv_id", "turn_idx", "jsonld")
-    if parallelism is None:
-        parallelism = kernel_partitions(docs.sparkSession)
-    if parallelism:
-        pruned = pruned.repartition(parallelism)
     schema = ", ".join(["conv_id string", "turn_idx int", *(f"{c} string" for c in columns),
                         "_error string"])
     return pruned.mapInArrow(emit, schema)
@@ -148,14 +140,17 @@ def docs_to_quads(
     with lineage columns (conv_id, turn_idx), document-local ``_:bN``
     blank-node labels (deterministic per document) and a null
     ``_error``, plus one ``_error`` row per quarantined document (see
-    ``_kernel_stage``).
+    ``_kernel_stage``). ``parallelism``: None sizes the stage with
+    ``kernel_partitioned``, 0 means the caller already partitioned.
     """
 
     def quads(expanded):
         issuer = BlankNodeIssuer()
         return node_map_to_quads(build_node_map(expanded, issuer), issuer)
 
-    return _kernel_stage(docs, resolve_context(context), quads, QUAD_COLUMNS, parallelism)
+    if parallelism is None:
+        docs = kernel_partitioned(docs)
+    return _kernel_stage(docs, resolve_context(context), quads, QUAD_COLUMNS)
 
 
 def _relabel_sql(col: str) -> str:
@@ -186,7 +181,7 @@ def canonicalize_bnodes(quads: DataFrame) -> DataFrame:
 TARGET_ROWS_PER_TASK = 16_000
 
 
-def kernel_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
+def kernel_partitions(spark: SparkSession, n_rows: int) -> int:
     """Partition count for the CPU-bound payload+kernel stages: scale
     with DATA (one task per ~TARGET_ROWS_PER_TASK turns) with a
     2x-cores floor for small inputs. Measured at 32 cores: at 100k
@@ -199,23 +194,20 @@ def kernel_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
     import math
 
     floor = 2 * spark.sparkContext.defaultParallelism
-    if not n_rows:
-        return floor
     return max(floor, math.ceil(n_rows / TARGET_ROWS_PER_TASK))
 
 
-def _kernel_partitioned(transcripts: DataFrame, n_rows: int | None) -> DataFrame:
-    """Repartition BEFORE payload assembly: the payload and its quad
-    stage (compiled or kernel) are CPU-per-row bound, and AQE's
-    byte-based coalescing of the upstream window shuffle would
-    otherwise run them on a handful of tasks (0.29 scaling efficiency
-    8->32 cores before; near-linear after; BENCH/BASELINE.md). One
-    shuffle covers both. Callers that know the input cardinality
-    cheaply (parquet footer counts) pass ``n_rows``; otherwise one
-    count() of the input pays for correctly-sized CPU stages."""
-    if n_rows is None:
-        n_rows = transcripts.count()
-    return transcripts.repartition(kernel_partitions(transcripts.sparkSession, n_rows))
+def kernel_partitioned(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned for a per-row CPU stage (the payload and
+    its quad stage, the kernel stage). AQE sizes shuffle partitions by
+    BYTES (64 MiB advisory), but these stages cost CPU per row, so a
+    byte-small input would coalesce to a handful of tasks and stop
+    scaling with cores (0.29 scaling efficiency 8->32 cores before;
+    near-linear after; BENCH/BASELINE.md). The row count is one job
+    run when the DataFrame is built; Catalyst prunes it to the columns
+    it needs, so over a derived table (transcripts, payloads) it is
+    the same no-column parquet scan as a count of the source table."""
+    return df.repartition(kernel_partitions(df.sparkSession, df.count()))
 
 
 def payload_quads(docs: DataFrame, context: dict | None = PIPELINE_CONTEXT) -> DataFrame:
@@ -245,41 +237,28 @@ def canonical_quads(transcripts: DataFrame) -> DataFrame:
     globally unique blank-node labels, keeping the lineage columns
     (conv_id, turn_idx). Unique by construction: every subject embeds
     the turn key and values are merged within a document."""
-    return _quads_of(_kernel_partitioned(transcripts, None))
+    return _quads_of(kernel_partitioned(transcripts))
 
 
-def transcripts_to_triples(
-    transcripts: DataFrame,
-    texts: DataFrame | None = None,
-    n_rows: int | None = None,
-) -> DataFrame:
+def transcripts_to_triples(transcripts: DataFrame) -> DataFrame:
     """Full S1->S7: transcripts -> the canonical triple set.
 
     The quad stream (``canonical_quads``) flows to the sink with NO
     global dropDuplicates; the only cross-turn repeats are the
     corpus-level entity facts, emitted relationally by
-    ``entity_triples`` as a small distinct. Entity facts need only
-    text: a window-free ``texts`` frame (when the caller has one)
-    skips the row_number shuffle on that branch.
+    ``entity_triples`` as a small distinct. Entity facts read the raw
+    ``transcripts``, not the repartitioned stream: they need only
+    ``text``, so that branch has no repartition and, over
+    ``transcripts_from_events``, no row_number window.
     """
-    parted = _kernel_partitioned(transcripts, n_rows)
-    entities = entity_triples(texts if texts is not None else parted)
-    return _quads_of(parted).select(*QUAD_COLUMNS).unionByName(entities)
+    quads = _quads_of(kernel_partitioned(transcripts)).select(*QUAD_COLUMNS)
+    return quads.unionByName(entity_triples(transcripts))
 
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query: events-derived transcripts -> triple set.
-    One ``events`` DataFrame feeds the footer count, the transcripts
-    and the window-free texts (one parquet schema inference, not
-    three)."""
-    from jsonld_spark.plans.session import read_table
-
-    events = read_table(spark, sf_dir, "events")
-    # row count from parquet footers (metadata-only job) sizes the
-    # CPU-stage partitioning without traversing the data
-    return transcripts_to_triples(
-        transcripts_of(events), texts=texts_of(events), n_rows=events.count()
-    )
+    Building it runs one pruned row count (``kernel_partitioned``)."""
+    return transcripts_to_triples(transcripts_from_events(spark, sf_dir))
 
 
 def nquads_lines(triples: DataFrame) -> DataFrame:

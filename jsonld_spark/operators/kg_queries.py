@@ -126,30 +126,6 @@ def entity_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("label").alias("component"))
 
 
-def characteristic_sets(
-    spark: SparkSession, sf_dir: str, triples: DataFrame | None = None
-) -> DataFrame:
-    """Characteristic sets (Neumann & Moerkotte, ICDE 2011): each
-    subject's sorted distinct predicate set, with how many subjects
-    share it and how many triples those subjects carry — the standard
-    RDF statistic for join-cardinality estimation, exactly what a
-    100-TB query planner precomputes over the triple table. Two hash
-    aggregations (both map-side partial): subject -> (pred set, n),
-    then pred set -> (n_subjects, n_triples); output cardinality is
-    the number of DISTINCT predicate combinations, small by nature."""
-    tri = triples if triples is not None else kg_triples(spark, sf_dir)
-    per_subj = tri.groupBy("subject").agg(
-        F.array_join(F.array_sort(F.collect_set("predicate")), "|").alias(
-            "charset"
-        ),
-        F.count("*").alias("n"),
-    )
-    return per_subj.groupBy("charset").agg(
-        F.count("*").alias("n_subjects"),
-        F.sum("n").alias("n_triples"),
-    )
-
-
 def reverse_adjacency(spark: SparkSession, sf_dir: str, triples: DataFrame | None = None) -> DataFrame:
     """Reverse adjacency: who points at each node — the triple table
     filtered by object, no back-pointer maintenance needed

@@ -652,9 +652,9 @@ def boilerplate_suite(
     kept/dropped summaries of the filtered corpus.
     Schema: (part, key, n_convs, n_turns)."""
     from jsonld_spark.operators import scratch
-    from jsonld_spark.sources.transcripts import transcript_corpus
+    from jsonld_spark.sources.transcripts import transcripts_from_events
 
-    turns = transcript_corpus(spark, sf_dir)
+    turns = transcripts_from_events(spark, sf_dir).select("conv_id", "role", "text")
     boiler = scratch.track(boilerplate_frequency(turns, frac))
 
     # ONE pass over the turns side for both summaries: broadcast-flag

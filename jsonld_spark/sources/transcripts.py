@@ -77,37 +77,18 @@ _TRANSCRIPT_SQL = [
 ]
 
 
-def transcripts_of(events: DataFrame) -> DataFrame:
-    """events -> transcripts, fully JVM-side and deterministic."""
-    return events.selectExpr(*_TRANSCRIPT_SQL)
-
-
-def texts_of(events: DataFrame) -> DataFrame:
-    """Just the text column, WITHOUT the row_number window: text
-    depends only on event_id, so consumers that need no turn ordering
-    (e.g. corpus-level entity facts) skip the window shuffle entirely."""
-    return events.selectExpr(f"{_TEXT_SQL} AS text")
-
-
 def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``transcripts_of`` the ``events`` table under ``sf_dir``."""
-    return transcripts_of(read_table(spark, sf_dir, "events"))
+    """The ``events`` table under ``sf_dir`` -> transcripts, fully
+    JVM-side and deterministic. A consumer that reads no ``turn_idx``
+    (corpus-level entity facts, boilerplate frequencies, ``count()``)
+    pays no window shuffle: Catalyst prunes the ``row_number`` window."""
+    return read_table(spark, sf_dir, "events").selectExpr(*_TRANSCRIPT_SQL)
 
 
 def transcript_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``texts_of`` the ``events`` table under ``sf_dir``."""
-    return texts_of(read_table(spark, sf_dir, "events"))
-
-
-def transcript_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(conv_id, role, text) — the corpus view for frequency-based
-    cleanup operators (boilerplate removal). Like transcript_texts it
-    skips the row_number window entirely: none of conv_id / role / text
-    needs turn ordering, so at 100 TB this is a pure narrow scan-side
-    projection with zero shuffle before the consumer's aggregation."""
-    return read_table(spark, sf_dir, "events").selectExpr(
-        f"{_CONV_ID_SQL} AS conv_id", f"{_ROLE_SQL} AS role", f"{_TEXT_SQL} AS text"
-    )
+    """Just the text column of ``transcripts_from_events`` (kgbench's
+    layer probes time entity facts over it)."""
+    return transcripts_from_events(spark, sf_dir).select("text")
 
 
 # The same derivation as a DuckDB SQL fragment (CTE body), kept next to

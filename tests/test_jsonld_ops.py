@@ -92,7 +92,7 @@ def test_document_transforms_quarantine_bad_documents(spark):
     ]
     docs = spark.createDataFrame(rows, "conv_id string, turn_idx int, jsonld string")
     for transform in (expand_documents, compact_documents, flatten_documents):
-        out = transform(docs, n_rows=len(rows))
+        out = transform(docs)
         assert out.columns == ["conv_id", "turn_idx", "doc"]
         by_turn = {r["turn_idx"]: r["doc"] for r in out.collect()}
         assert sorted(by_turn) == [0, 1, 2, 3] and by_turn[0] is not None

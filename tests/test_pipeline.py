@@ -475,8 +475,10 @@ def test_multimodal_byte_exact_on_non_ascii_and_null(spark):
 def test_characteristic_sets_planted(spark):
     """Neumann-Moerkotte characteristic sets over a planted triple
     table: subjects group by their DISTINCT sorted predicate set,
-    n_triples counts every triple (including repeated predicates)."""
-    from jsonld_spark.operators import kg_queries
+    n_triples counts every triple (including repeated predicates).
+    They are the adjacency suite's ``charsets`` part: edges = the set,
+    n1 = n_subjects, n2 = n_triples."""
+    from jsonld_spark.operators import scratch, suites
 
     rows = [
         ("s1", "p", "lit", "a", None, None),
@@ -491,10 +493,12 @@ def test_characteristic_sets_planted(spark):
         "subject string, predicate string, obj_kind string, "
         "obj_value string, obj_type string, obj_lang string",
     )
+    suite = suites.kg_adjacency_suite(spark, "", triples=tri)
     got = {
-        r["charset"]: (r["n_subjects"], r["n_triples"])
-        for r in kg_queries.characteristic_sets(spark, "", triples=tri).collect()
+        r["edges"]: (r["n1"], r["n2"])
+        for r in suite.where(F.col("part") == "charsets").collect()
     }
+    scratch.release()
     assert got == {"p|q": (2, 5), "p": (1, 1)}
 
 

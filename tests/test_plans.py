@@ -86,6 +86,21 @@ def test_dimension_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_catalyst_prunes_the_transcript_window(spark):
+    """The flagship passes no row count and no window-free copy of the
+    transcripts: it relies on Catalyst pruning the row_number window
+    wherever turn_idx is not read. kg_triples holds exactly one Window,
+    the quad branch's (the entity-fact branch has none), and the
+    transcripts' count reads no column, like a count of ``events``."""
+    from jsonld_spark.sources.transcripts import transcripts_from_events
+
+    plan = physical_plan_of(kg_triples(spark, SF))
+    assert plan.count("Window [") == 1, plan
+    count_plan = physical_plan_of(transcripts_from_events(spark, SF).groupBy().count())
+    assert "Window" not in count_plan, count_plan
+    assert "ReadSchema: struct<>" in count_plan, count_plan
+
+
 def test_kernel_stage_parallelism_is_explicit(spark):
     """The repartition before the CPU-bound payload + compiled quad
     stage must survive: without it AQE byte-coalescing strangles that
@@ -143,8 +158,8 @@ def test_graph_ops_build_lazily(spark):
         triangle_counts,
     )
 
-    # kg_triples itself runs one metadata-only footer-count job at
-    # build (documented) — snapshot the job count after it
+    # kg_triples itself runs one pruned count job at build
+    # (documented) — snapshot the job count after it
     edges = iri_edges(kg_triples(spark, SF))
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup() or [])
@@ -313,9 +328,9 @@ def test_boilerplate_removal_is_broadcast_anti_join_shaped(spark):
     join — the huge turns side never shuffles beyond its scan at
     100 TB."""
     from jsonld_spark.operators import text
-    from jsonld_spark.sources.transcripts import transcript_corpus
+    from jsonld_spark.sources.transcripts import transcripts_from_events
 
-    turns = transcript_corpus(spark, SF)
+    turns = transcripts_from_events(spark, SF).select("conv_id", "role", "text")
     boiler = text.boilerplate_frequency(turns)
     plan = physical_plan_of(boiler)
     assert "CartesianProduct" not in plan, plan
